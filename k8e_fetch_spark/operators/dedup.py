@@ -54,13 +54,12 @@ def multi_source_union(
     return reduce(DataFrame.unionByName, parts).distinct()
 
 
-def insert_ignore(existing: DataFrame, new: DataFrame) -> DataFrame:
-    """op-insert-ignore: idempotent insert-if-absent merge.
-
-    ``INSERT OR IGNORE INTO comp SELECT DISTINCT … FROM t``
-    (/root/reference/bin/fetcher.bash:159): rows already present (full-row
-    match, per the unique index at :158) are silently skipped. Returns
-    the post-merge component. Rerun-safe: applying twice is a no-op.
+def insert_ignore_delta(existing: DataFrame, new: DataFrame) -> DataFrame:
+    """The rows an ``INSERT OR IGNORE`` of ``new`` adds to ``existing``:
+    the distinct rows of ``new`` (projected onto ``existing``'s columns)
+    that no row of ``existing`` matches. One keyed left-anti join;
+    every insert-ignore merge (:func:`insert_ignore` and the table
+    formats in plans/snapshots.py) computes its delta here.
 
     The match is null-safe (``<=>``): NULL attribute combos merge once.
     (Deliberate divergence from SQLite, whose unique indexes treat NULLs
@@ -72,8 +71,19 @@ def insert_ignore(existing: DataFrame, new: DataFrame) -> DataFrame:
     cond = reduce(
         lambda a, b: a & b, [F.col(f"n.{c}").eqNullSafe(F.col(f"e.{c}")) for c in cols]
     )
-    additions = n.join(e, on=cond, how="left_anti")
-    return existing.unionByName(additions)
+    return n.join(e, on=cond, how="left_anti")
+
+
+def insert_ignore(existing: DataFrame, new: DataFrame) -> DataFrame:
+    """op-insert-ignore: idempotent insert-if-absent merge.
+
+    ``INSERT OR IGNORE INTO comp SELECT DISTINCT … FROM t`` (reference
+    ``bin/fetcher.bash:159``): rows already present (full-row match, per
+    the unique index at :158) are silently skipped. Returns the
+    post-merge component, ``existing`` ∪ :func:`insert_ignore_delta`.
+    Rerun-safe: applying twice is a no-op.
+    """
+    return existing.unionByName(insert_ignore_delta(existing, new))
 
 
 def exact_dedup_keep_first(

@@ -75,7 +75,7 @@ def md5_32(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
 
 
-def hashed_shingles(text: Column | str, k: int = 3, hash_mode: str = "xxhash64") -> Column:
+def hashed_shingles(text: str, k: int = 3, hash_mode: str = "xxhash64") -> Column:
     """Distinct k-word shingles as 64-bit identities — the set-identity
     form the pair pipelines store and intersect.
 
@@ -103,60 +103,37 @@ def hashed_shingles(text: Column | str, k: int = 3, hash_mode: str = "xxhash64")
     mode: multi-arg xxhash64 seeds per field, and a <k-token trimmed
     text never string-equals a k-token space-joined gram.
 
-    ``text`` may be a Column (original API) or a column NAME: the name
-    form renders the whole shingle expression as ONE ``F.expr`` string
-    (r18 — a single Py4J round trip instead of ~50; the parsed tree is
-    the same CASE/transform/xxhash64 chain, with the split subexpression
-    textually repeated exactly as the Column form repeats its tree).
-
-    Name-form caveats (ADVICE r18): the name must be a TOP-LEVEL column
-    (it is backtick-quoted whole, so ``"meta.text"`` will not resolve a
-    nested field — pass a Column for those), and direct callers must be
-    on the default string-literal parse (registry-routed queries pin it;
-    spark.sql.parser.escapedStringLiterals=true changes what the
-    rendered regex literals mean)."""
-    if isinstance(text, str):
-        c = f"`{text}`"
-        toks_s = f"split(trim({c}), '\\\\s+')"
-        if hash_mode == "md5_32":
-
-            def m5(x: str) -> str:
-                return f"CAST(conv(substring(md5({x}), 1, 8), 16, 10) AS BIGINT)"
-
-            gram = m5(
-                "concat_ws(' ', "
-                + ", ".join(f"element_at({toks_s}, i + {j + 1})" for j in range(k))
-                + ")"
-            )
-            short = f"array({m5(f'trim({c})')})"
-        else:
-            gram = (
-                "xxhash64("
-                + ", ".join(f"element_at({toks_s}, i + {j + 1})" for j in range(k))
-                + ")"
-            )
-            short = f"array(xxhash64(trim({c})))"
-        return F.expr(
-            f"CASE WHEN size({toks_s}) >= {k} THEN array_distinct("
-            f"transform(sequence(0, size({toks_s}) - {k}), i -> {gram})) "
-            f"ELSE {short} END"
-        )
-    toks = F.split(F.trim(text), r"\s+")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), n - k)
+    ``text`` is a top-level column name (backtick-quoted whole). The
+    whole expression is ONE parsed ``F.expr`` string, so direct callers
+    must be on the default string-literal parse (registry-routed
+    queries pin it; spark.sql.parser.escapedStringLiterals=true changes
+    what the rendered regex literal means)."""
+    c = f"`{text}`"
+    toks_s = f"split(trim({c}), '\\\\s+')"
     if hash_mode == "md5_32":
-        grams = F.transform(
-            idx,
-            lambda i: md5_32(
-                F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(k)])
-            ),
+
+        def m5(x: str) -> str:
+            return f"CAST(conv(substring(md5({x}), 1, 8), 16, 10) AS BIGINT)"
+
+        gram = m5(
+            "concat_ws(' ', "
+            + ", ".join(f"element_at({toks_s}, i + {j + 1})" for j in range(k))
+            + ")"
         )
-        return F.when(n >= k, F.array_distinct(grams)).otherwise(
-            F.array(md5_32(F.trim(text)))
+        short = f"array({m5(f'trim({c})')})"
+    else:
+        gram = (
+            "xxhash64("
+            + ", ".join(f"element_at({toks_s}, i + {j + 1})" for j in range(k))
+            + ")"
         )
-    grams = F.transform(idx, lambda i: F.xxhash64(*[F.element_at(toks, i + j + 1) for j in range(k)]))
-    # short docs: single whole-text shingle, hashed in the same domain
-    return F.when(n >= k, F.array_distinct(grams)).otherwise(F.array(F.xxhash64(F.trim(text))))
+        # short docs: single whole-text shingle, hashed in the same domain
+        short = f"array(xxhash64(trim({c})))"
+    return F.expr(
+        f"CASE WHEN size({toks_s}) >= {k} THEN array_distinct("
+        f"transform(sequence(0, size({toks_s}) - {k}), i -> {gram})) "
+        f"ELSE {short} END"
+    )
 
 
 def minhash_signature(hashes_col: Column, num_hashes: int = 32) -> Column:
@@ -268,7 +245,7 @@ def minhash_signature_arrow(num_hashes: int = 32):
 
 
 def lsh_bands(
-    sig_col: Column | str,
+    sig_col: str,
     num_bands: int = 8,
     num_hashes: int = 32,
     band_key: str = "xxhash64",
@@ -283,42 +260,21 @@ def lsh_bands(
     way: equal value tuples iff equal keys; the hash adds only a
     2^-64 collision that the concat form doesn't have).
 
-    ``sig_col`` may be a Column (the original API) or a column NAME:
-    the name form renders the whole band array as ONE ``F.expr``
-    string — a single Py4J round trip instead of ~12 per band (r18:
-    ~0.1 s of driver-side construction per minhash query). Both forms
-    produce identical band membership (element_at(sig, abs_idx) ==
-    slice(sig, ...)[rel_idx]); the equivalence is pinned in
-    tests/test_similarity.py's store-relation cross-check, which
-    compares a name-form caller against a Column-form reference.
-    Name-form caveat (ADVICE r18): top-level column names only — the
-    name is interpolated whole, so pass a Column for nested fields."""
+    ``sig_col`` is a top-level column name (backtick-quoted whole); the
+    band array is built as ONE parsed ``F.expr`` string."""
     if num_hashes % num_bands != 0:
         raise ValueError(f"num_hashes={num_hashes} not divisible by num_bands={num_bands}")
     rows_per_band = num_hashes // num_bands
-    if isinstance(sig_col, str):
-        structs = []
-        for bi in range(num_bands):
-            joined = "concat_ws(',', " + ", ".join(
-                f"element_at({sig_col}, {bi * rows_per_band + j + 1})"
-                for j in range(rows_per_band)
-            ) + ")"
-            key = f"xxhash64({joined})" if band_key == "xxhash64" else joined
-            structs.append(f"named_struct('band_idx', {bi}, 'band_hash', {key})")
-        return F.expr("array(" + ", ".join(structs) + ")")
-    band_structs = []
+    sig = f"`{sig_col}`"
+    structs = []
     for bi in range(num_bands):
-        band = F.slice(sig_col, bi * rows_per_band + 1, rows_per_band)
-        joined = F.concat_ws(",", *[band[i] for i in range(rows_per_band)])
-        band_structs.append(
-            F.struct(
-                F.lit(bi).alias("band_idx"),
-                (F.xxhash64(joined) if band_key == "xxhash64" else joined).alias(
-                    "band_hash"
-                ),
-            )
-        )
-    return F.array(*band_structs)
+        joined = "concat_ws(',', " + ", ".join(
+            f"element_at({sig}, {bi * rows_per_band + j + 1})"
+            for j in range(rows_per_band)
+        ) + ")"
+        key = f"xxhash64({joined})" if band_key == "xxhash64" else joined
+        structs.append(f"named_struct('band_idx', {bi}, 'band_hash', {key})")
+    return F.expr("array(" + ", ".join(structs) + ")")
 
 
 def minhash_candidate_pairs(

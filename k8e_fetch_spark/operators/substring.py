@@ -47,57 +47,18 @@ of the mandated LLM-training-data extension surface (SURVEY.md §2.6).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _SPAN_ARR = "array<struct<s:int,e:int>>"
 
 
-def merge_spans(dp: Column, min_len: int) -> Column:
-    """Fold a SORTED array of 0-based window-start positions into
-    merged disjoint half-open token spans [s, e): each position p
-    covers [p, p+min_len); overlapping or adjacent windows coalesce.
-    Pure expression — evaluated row-local inside the scan stage."""
-    L = F.lit(min_len)
-    init = F.struct(
-        F.array().cast(_SPAN_ARR).alias("sp"),
-        F.lit(-1).alias("cs"),
-        F.lit(-1).alias("ce"),
-    )
-
-    def step(acc: Column, p: Column) -> Column:
-        fresh = (acc["cs"] < 0) | (p > acc["ce"])  # start a new span
-        flushed = F.when(
-            fresh & (acc["cs"] >= 0),
-            F.concat(
-                acc["sp"],
-                F.array(F.struct(acc["cs"].alias("s"), acc["ce"].alias("e"))),
-            ),
-        ).otherwise(acc["sp"])
-        return F.struct(
-            flushed.alias("sp"),
-            F.when(fresh, p).otherwise(acc["cs"]).alias("cs"),
-            # sorted input + constant L: p + L >= previous ce always
-            (p + L).alias("ce"),
-        )
-
-    def finish(acc: Column) -> Column:
-        return F.when(
-            acc["cs"] >= 0,
-            F.concat(
-                acc["sp"],
-                F.array(F.struct(acc["cs"].alias("s"), acc["ce"].alias("e"))),
-            ),
-        ).otherwise(acc["sp"])
-
-    return F.aggregate(dp, init, step, finish)
-
-
 def _merge_spans_sql(dp_expr: str, min_len: int) -> str:
-    """SQL-string rendering of :func:`merge_spans` (r18): the Column
-    fold cost ~120 Py4J round trips per call; this is the same parsed
-    HOF tree in one round trip. Equivalence with the Column form is
-    pinned in tests/test_substring.py."""
+    """Fold the SORTED ``array<int>`` of 0-based window-start positions
+    that ``dp_expr`` renders into merged disjoint half-open token spans
+    [s, e): each position p covers [p, p+min_len); overlapping or
+    adjacent windows coalesce. One parsed ``aggregate`` expression,
+    evaluated row-local inside the scan stage."""
     flush = (
         "CASE WHEN acc.cs >= 0 "
         "THEN concat(acc.sp, array(named_struct('s', acc.cs, 'e', acc.ce))) "
@@ -108,8 +69,9 @@ def _merge_spans_sql(dp_expr: str, min_len: int) -> str:
         "named_struct("
         f"'sp', CAST(array() AS {_SPAN_ARR}), 'cs', -1, 'ce', -1), "
         "(acc, p) -> named_struct("
-        # start a new span when cs < 0 or p > ce; flush the previous
-        # span first (exactly merge_spans' fresh/flushed logic)
+        # start a new span when cs < 0 or p > ce, flushing the previous
+        # one first; sorted input + constant min_len keeps p + min_len
+        # >= the previous ce, so ce only grows
         f"'sp', CASE WHEN ((acc.cs < 0) OR (p > acc.ce)) THEN {flush} ELSE acc.sp END, "
         "'cs', CASE WHEN ((acc.cs < 0) OR (p > acc.ce)) THEN p ELSE acc.cs END, "
         f"'ce', p + {min_len}), "
@@ -133,16 +95,11 @@ def duplicated_span_removal(
     ``cleaned_text`` is the surviving tokens joined by single spaces
     (whitespace-normalized — the tokenizer's view of the text).
 
-    Direct callers must be on the default string-literal parse
-    (ADVICE r18): the operator builds parsed-SQL regex literals, so a
-    session with spark.sql.parser.escapedStringLiterals=true silently
-    changes tokenization. Registry-routed queries pin the default.
+    Direct callers must be on the default string-literal parse: the
+    operator builds parsed-SQL regex literals, so a session with
+    spark.sql.parser.escapedStringLiterals=true silently changes
+    tokenization. Registry-routed queries pin the default.
     """
-    # expression chains rendered as parsed SQL strings (r18): the
-    # Column-API construction cost ~0.45 s of driver round trips per
-    # call; the parsed trees are identical (equivalence of the span
-    # fold pinned in tests/test_substring.py, output hash-checked by
-    # the declared query's oracle)
     toks = df.select(
         F.col(id_col), F.split(F.trim(F.col(text_col)), r"\s+").alias("t")
     )

@@ -45,18 +45,14 @@ def n_bpe_tokens(col: Column) -> Column:
     return F.size(F.regexp_extract_all(col, F.lit(BPE_TOKEN_PATTERN), 0))
 
 
-# --- Spark-SQL renderings of the quality heuristics (r19) -----------
-# The quality/ratio chains are ~30 Column ops each and sit on SEVEN
-# query paths; rendered as ONE parsed expression per call they build in
-# a single Py4J round trip (VERDICT r18 #5, the r18 one-expr pattern).
-# Literal discipline: every double literal carries the D suffix —
-# Spark SQL parses a bare `0.0` as DECIMAL(1,1), which would silently
-# change the CASE/arithmetic result type the Column form (F.lit(0.0),
-# a DoubleType) produces. Values are bit-identical to the Column forms
-# (same ops, same IEEE order; cross-form equality pinned in
-# tests/test_text.py). String forms accept TOP-LEVEL column names only
-# and assume the default string-literal parse (registry-routed queries
-# pin it), same caveats as the r18 name forms.
+# --- Spark-SQL renderings of the quality heuristics ----------------
+# Each heuristic is ONE parsed expression per call, so building it costs
+# a single Py4J round trip. Every double literal carries the D suffix:
+# Spark SQL parses a bare `0.0` as DECIMAL(1,1), which would change the
+# CASE/arithmetic result type from DOUBLE. The builders take a top-level
+# column name and assume the default string-literal parse
+# (registry-routed queries pin it); tests/test_properties.py pins the
+# values against a pure-Python model of Spark's semantics.
 
 
 def _sql_n_tokens(c: str) -> str:
@@ -92,50 +88,25 @@ def _sql_quality_score(c: str) -> str:
     return f"floor(({raw}) * 1000000.0D + 0.5D) / 1000000.0D"
 
 
-def punct_ratio(col: Column | str) -> Column:
-    """Punctuation chars / total chars (0 for empty strings).
-
-    ``col`` may be a Column (original API) or a TOP-LEVEL column NAME
-    (one-expr parsed form, r19)."""
-    if isinstance(col, str):
-        return F.expr(_sql_punct_ratio(f"`{col}`"))
-    total = F.length(col)
-    punct = F.length(F.regexp_replace(col, "[A-Za-z0-9 ]", ""))
-    return F.when(total == 0, F.lit(0.0)).otherwise(punct / total)
+def punct_ratio(col: str) -> Column:
+    """Punctuation chars / total chars (0 for empty strings). ``col``
+    is a top-level column name."""
+    return F.expr(_sql_punct_ratio(f"`{col}`"))
 
 
-def stopword_ratio(col: Column | str) -> Column:
-    """Stopword tokens / total tokens (0 for empty strings).
-
-    ``col`` may be a Column (original API) or a TOP-LEVEL column NAME
-    (one-expr parsed form, r19)."""
-    if isinstance(col, str):
-        return F.expr(_sql_stopword_ratio(f"`{col}`"))
-    toks = tokens(F.lower(col))
-    stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
-    total = n_tokens(col)
-    return F.when(total == 0, F.lit(0.0)).otherwise(stop / total)
+def stopword_ratio(col: str) -> Column:
+    """Stopword tokens / total tokens (0 for empty strings). ``col`` is
+    a top-level column name."""
+    return F.expr(_sql_stopword_ratio(f"`{col}`"))
 
 
-def quality_score(col: Column | str) -> Column:
+def quality_score(col: str) -> Column:
     """Deterministic quality heuristic in [0,1]: rewards mid-length
     docs, penalizes punctuation soup and stopword-free keyword stuffing.
     Weights are arbitrary but fixed; the point is the shape (pure
-    column expression, zero shuffles).
-
-    ``col`` may be a Column (original API) or a TOP-LEVEL column NAME:
-    the name form renders the whole heuristic (both ratio subtrees +
-    the fixed-point rounding) as ONE ``F.expr`` string — a single Py4J
-    round trip instead of ~30 per call across its seven query paths
-    (r19; bit-identical values, see the rendering block above)."""
-    from k8e_fetch_spark.functions.rounding import round_fixed
-
-    if isinstance(col, str):
-        return F.expr(_sql_quality_score(f"`{col}`"))
-    length_term = F.least(F.length(col) / F.lit(500.0), F.lit(1.0))
-    punct_term = F.lit(1.0) - F.least(punct_ratio(col) * 4, F.lit(1.0))
-    stop_term = F.least(stopword_ratio(col) * 5, F.lit(1.0))
-    return round_fixed(0.4 * length_term + 0.3 * punct_term + 0.3 * stop_term, 6)
+    column expression, zero shuffles), rounded to 6 decimals. ``col``
+    is a top-level column name."""
+    return F.expr(_sql_quality_score(f"`{col}`"))
 
 
 def fingerprint(col: Column) -> Column:

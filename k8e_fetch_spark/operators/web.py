@@ -130,7 +130,7 @@ PUBLIC_SUFFIXES_2: tuple[str, ...] = (
 )
 
 
-def registered_domain_psl(host: Column | str) -> Column:
+def registered_domain_psl(host: str) -> Column:
     """Public-suffix-aware registered domain: longest matching public
     suffix + one label. ``shop.acme.co.uk`` -> ``acme.co.uk`` (the
     naive last-two-labels rule folds it to ``co.uk``, merging every
@@ -142,51 +142,28 @@ def registered_domain_psl(host: Column | str) -> Column:
     no join, no shuffle; identical CASE logic is emitted for the
     DuckDB oracle by :func:`sql_registered_domain_psl`.
 
-    ``host`` may be a Column (original API) or a column NAME: the name
-    form renders the whole CASE as ONE ``F.expr`` string (r18 — the
-    two literal ``isin`` lists alone cost ~170 Py4J round trips per
-    call; the parsed IN-list predicate is identical).
+    ``host`` is a top-level column name (backtick-quoted whole); the
+    CASE is ONE parsed ``F.expr`` string, so direct callers must be on
+    the default string-literal parse (registry-routed queries pin it;
+    escapedStringLiterals=true changes the meaning of the rendered
+    ``split`` regex). A host that IS a bare public suffix has no
+    registrable label and is returned unchanged, like a single-label
+    host."""
+    h = f"`{host}`"
+    parts = f"split({h}, '\\\\.')"
 
-    Name-form caveats (ADVICE r18): the name must be a TOP-LEVEL column
-    (backtick-quoted whole — pass a Column for nested fields), and
-    direct callers must be on the default string-literal parse
-    (registry-routed queries pin it; escapedStringLiterals=true changes
-    the meaning of the rendered ``split`` regex)."""
-    if isinstance(host, str):
-        h = f"`{host}`"
-        parts = f"split({h}, '\\\\.')"
+    def last(n: int) -> str:
+        return f"concat_ws('.', slice({parts}, -{n}, {n}))"
 
-        def last(n: int) -> str:
-            return f"concat_ws('.', slice({parts}, -{n}, {n}))"
-
-        s3 = ", ".join(f"'{s}'" for s in PUBLIC_SUFFIXES_3)
-        s2 = ", ".join(f"'{s}'" for s in PUBLIC_SUFFIXES_2)
-        return F.expr(
-            f"CASE WHEN {last(3)} IN ({s3}) THEN "
-            f"(CASE WHEN size({parts}) >= 4 THEN {last(4)} ELSE {h} END) "
-            f"WHEN {last(2)} IN ({s2}) THEN "
-            f"(CASE WHEN size({parts}) >= 3 THEN {last(3)} ELSE {h} END) "
-            f"WHEN size({parts}) >= 2 THEN {last(2)} "
-            f"ELSE {h} END"
-        )
-    parts = F.split(host, r"\.")
-    n = F.size(parts)
-    last2 = F.concat_ws(".", F.slice(parts, -2, 2))
-    last3 = F.concat_ws(".", F.slice(parts, -3, 3))
-    last4 = F.concat_ws(".", F.slice(parts, -4, 4))
-    # a host that IS a bare public suffix has no registrable label —
-    # convention: return the host unchanged (same as single-label hosts)
-    return (
-        F.when(
-            last3.isin(list(PUBLIC_SUFFIXES_3)),
-            F.when(n >= 4, last4).otherwise(host),
-        )
-        .when(
-            last2.isin(list(PUBLIC_SUFFIXES_2)),
-            F.when(n >= 3, last3).otherwise(host),
-        )
-        .when(n >= 2, last2)
-        .otherwise(host)
+    s3 = ", ".join(f"'{s}'" for s in PUBLIC_SUFFIXES_3)
+    s2 = ", ".join(f"'{s}'" for s in PUBLIC_SUFFIXES_2)
+    return F.expr(
+        f"CASE WHEN {last(3)} IN ({s3}) THEN "
+        f"(CASE WHEN size({parts}) >= 4 THEN {last(4)} ELSE {h} END) "
+        f"WHEN {last(2)} IN ({s2}) THEN "
+        f"(CASE WHEN size({parts}) >= 3 THEN {last(3)} ELSE {h} END) "
+        f"WHEN size({parts}) >= 2 THEN {last(2)} "
+        f"ELSE {h} END"
     )
 
 
@@ -242,7 +219,7 @@ def _spark_lit(text: str) -> str:
     return "'" + text.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
-def canonical_url(url: Column | str) -> Column:
+def canonical_url(url: str) -> Column:
     """Canonical form of a URL: lowercase scheme and host, default
     port stripped (http:80 / https:443), fragment dropped, tracking
     params (``utm_*``, ``fbclid``, ``gclid``) dropped, remaining query
@@ -257,68 +234,35 @@ def canonical_url(url: Column | str) -> Column:
     RE2-compatible patterns and engine-paired list functions only, so
     :func:`sql_canonical_url` renders the identical rule for DuckDB.
 
-    ``url`` may be a Column (original API) or a TOP-LEVEL column NAME:
-    the name form renders the whole canonicalization as ONE ``F.expr``
-    string (r19, the r18 one-expr pattern — the Column form costs ~60
-    gateway calls per build; the parsed tree is the same
-    extract/CASE/filter/sort/concat chain, with the extract
-    subexpressions textually repeated exactly as the Column form
-    repeats its tree). Name-form caveats as elsewhere: top-level
-    column names only; direct callers must be on the default
-    string-literal parse (registry-routed queries pin it)."""
-    if isinstance(url, str):
-        u = f"`{url}`"
-        scheme_s = f"lower(regexp_extract({u}, {_spark_lit(SCHEME_RE)}, 1))"
-        host_s = f"lower(regexp_extract({u}, {_spark_lit(HOST_RE)}, 1))"
-        port_s = f"regexp_extract({u}, {_spark_lit(PORT_RE)}, 1)"
-        path_s = (
-            f"regexp_replace(regexp_extract({u}, {_spark_lit(PATH_RE)}, 1), "
-            "'/$', '')"
-        )
-        qs_s = f"regexp_extract({u}, {_spark_lit(QUERY_RE)}, 1)"
-        keep_port_s = (
-            f"({port_s} <> '' AND NOT (({scheme_s} = 'http' AND {port_s} = '80') "
-            f"OR ({scheme_s} = 'https' AND {port_s} = '443')))"
-        )
-        port_part_s = (
-            f"CASE WHEN {keep_port_s} THEN concat(':', {port_s}) ELSE '' END"
-        )
-        params_s = (
-            f"array_sort(filter(split({qs_s}, '&'), "
-            f"x -> x <> '' AND NOT (x RLIKE {_spark_lit(TRACKING_PARAM_RE)})))"
-        )
-        qs_norm_s = f"concat_ws('&', {params_s})"
-        return F.expr(
-            f"concat({scheme_s}, '://', {host_s}, {port_part_s}, {path_s}, "
-            f"CASE WHEN {qs_norm_s} <> '' THEN concat('?', {qs_norm_s}) "
-            "ELSE '' END)"
-        )
-    scheme = F.lower(F.regexp_extract(url, SCHEME_RE, 1))
-    host = F.lower(F.regexp_extract(url, HOST_RE, 1))
-    port = F.regexp_extract(url, PORT_RE, 1)
-    path = F.regexp_replace(F.regexp_extract(url, PATH_RE, 1), r"/$", "")
-    qs = F.regexp_extract(url, QUERY_RE, 1)
-    keep_port = (port != F.lit("")) & ~(
-        ((scheme == F.lit("http")) & (port == F.lit("80")))
-        | ((scheme == F.lit("https")) & (port == F.lit("443")))
+    ``url`` is a top-level column name (backtick-quoted whole); the
+    canonicalization is ONE parsed ``F.expr`` string, so direct callers
+    must be on the default string-literal parse (registry-routed
+    queries pin it)."""
+    u = f"`{url}`"
+    scheme_s = f"lower(regexp_extract({u}, {_spark_lit(SCHEME_RE)}, 1))"
+    host_s = f"lower(regexp_extract({u}, {_spark_lit(HOST_RE)}, 1))"
+    port_s = f"regexp_extract({u}, {_spark_lit(PORT_RE)}, 1)"
+    path_s = (
+        f"regexp_replace(regexp_extract({u}, {_spark_lit(PATH_RE)}, 1), "
+        "'/$', '')"
     )
-    port_part = F.when(keep_port, F.concat(F.lit(":"), port)).otherwise(F.lit(""))
-    params = F.array_sort(
-        F.filter(
-            F.split(qs, "&"),
-            lambda x: (x != F.lit("")) & ~x.rlike(TRACKING_PARAM_RE),
-        )
+    qs_s = f"regexp_extract({u}, {_spark_lit(QUERY_RE)}, 1)"
+    keep_port_s = (
+        f"({port_s} <> '' AND NOT (({scheme_s} = 'http' AND {port_s} = '80') "
+        f"OR ({scheme_s} = 'https' AND {port_s} = '443')))"
     )
-    qs_norm = F.concat_ws("&", params)
-    return F.concat(
-        scheme,
-        F.lit("://"),
-        host,
-        port_part,
-        path,
-        F.when(qs_norm != F.lit(""), F.concat(F.lit("?"), qs_norm)).otherwise(
-            F.lit("")
-        ),
+    port_part_s = (
+        f"CASE WHEN {keep_port_s} THEN concat(':', {port_s}) ELSE '' END"
+    )
+    params_s = (
+        f"array_sort(filter(split({qs_s}, '&'), "
+        f"x -> x <> '' AND NOT (x RLIKE {_spark_lit(TRACKING_PARAM_RE)})))"
+    )
+    qs_norm_s = f"concat_ws('&', {params_s})"
+    return F.expr(
+        f"concat({scheme_s}, '://', {host_s}, {port_part_s}, {path_s}, "
+        f"CASE WHEN {qs_norm_s} <> '' THEN concat('?', {qs_norm_s}) "
+        "ELSE '' END)"
     )
 
 

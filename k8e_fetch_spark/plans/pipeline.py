@@ -50,20 +50,21 @@ from k8e_fetch_spark.sources import ingest, manifest as mf
 
 
 class Pipeline:
-    """``table_format`` selects the component-table storage layout
-    (VERDICT r12 #4 — the maintenance machinery reachable from the
-    front door, not only as declared queries):
+    """``table_format`` selects the component-table storage layout.
+    Every format runs the same compress stage — one insert-ignore merge
+    per component per run — and differs only in how the merge result is
+    stored and published:
 
-    - ``"parquet"`` (default): plain dir-per-component with the
-      temp-write + atomic swap of :meth:`_sink` — the original flow,
-      byte-identical plans.
+    - ``"parquet"`` (default): plain dir-per-component; each merge
+      rewrites the component through the temp-write + atomic swap of
+      :meth:`_sink`.
     - ``"snapshot"``: pointer-flip snapshot tables
       (plans/snapshots.py:merge_insert_ignore) — atomic merges, cheap
       time travel, O(table) write per merge.
     - ``"manifest"``: incremental manifest tables
       (merge_insert_ignore_incremental) — O(delta) write per merge,
       the 100 TB accretion shape.
-    - ``"occ"`` (r13): manifest tables with the CONCURRENT-WRITER
+    - ``"occ"``: manifest tables with the CONCURRENT-WRITER
       commit protocol (merge_insert_ignore_occ — version-claim CAS,
       lost races recompute-and-retry). Same O(delta) writes; pick it
       when more than one pipeline run can target the warehouse.
@@ -77,7 +78,7 @@ class Pipeline:
     merge already rewrites the full table in one pass, so there is no
     small-file accretion to repair.
 
-    ``zorder_by`` (optional, r14 — VERDICT r13 #7) lays each component
+    ``zorder_by`` (optional) lays each component
     out in Z-order on 2-3 columns as the same post-compress pass —
     Delta's ``OPTIMIZE ... ZORDER BY`` from the pipeline front door.
     Works on every format (parquet rewrite+swap; snapshot pointer
@@ -176,36 +177,11 @@ class Pipeline:
         return [n for n in sorted(names) if any(re.search(p, n) for p in comp.table_include)]
 
     def compress(self, tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
-        if self.table_format != "parquet":
-            return self._compress_into_tables(tables)
-        components: dict[str, DataFrame] = {}
-        for comp in self.spec.compressors:
-            matched = self.matched_tables(comp, tables)
-            for binding in comp.bindings:
-                columns = self.spec.components[binding.component]
-                for tname in matched:  # one INSERT OR IGNORE per source table
-                    src = project(tables[tname], columns, dict(binding.subst)).distinct()
-                    existing = components.get(binding.component)
-                    if existing is None:
-                        # CREATE TABLE IF NOT EXISTS … LIMIT 0 + first insert
-                        existing = self._read_component(binding.component, src)
-                    components[binding.component] = insert_ignore(existing, src)
-        # persist: the merge result replaces the component table
-        for name, df in components.items():
-            components[name] = self._sink(df, name)
-        self._maybe_compact(components)
-        return components
-
-    def _compress_into_tables(self, tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
-        """Compress stage, snapshot/manifest form: the component's
-        existing state lives in its table directory, so build each
-        component's BATCH (union of the per-source projections — both
-        merge forms dedup the batch and anti-join it against the
-        current state internally) and run exactly ONE atomic merge per
-        component. Same final content as the chained per-source
-        ``insert_ignore`` of the parquet flow (set semantics), with the
-        table format's guarantees: crash-safe pointer flips, rerun
-        idempotency, and — in manifest form — O(delta) write volume."""
+        """Build each component's batch (the union of its per-source
+        projections) and merge it into the component table exactly once
+        per run: existing ∪ (distinct batch ∖ existing), null-safe. The
+        table format decides only where the existing state lives and how
+        the merge result is published."""
         from k8e_fetch_spark.plans import snapshots as snap
 
         batches: dict[str, DataFrame] = {}
@@ -222,7 +198,12 @@ class Pipeline:
         components: dict[str, DataFrame] = {}
         for name, batch in batches.items():
             tdir = self._component_path(name)
-            if self.table_format == "snapshot":
+            if self.table_format == "parquet":
+                # CREATE TABLE IF NOT EXISTS … LIMIT 0 + INSERT OR IGNORE;
+                # the result replaces the component directory
+                existing = self._read_component(name, batch)
+                components[name] = self._sink(insert_ignore(existing, batch), name)
+            elif self.table_format == "snapshot":
                 snap.merge_insert_ignore(self.spark, tdir, batch)
                 components[name] = snap.read_table(self.spark, tdir)
             elif self.table_format == "occ":

@@ -44,6 +44,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from k8e_fetch_spark.operators.dedup import insert_ignore, insert_ignore_delta
 from k8e_fetch_spark.plans.cas import (  # noqa: F401  (re-export: public API)
     DEFAULT_CAS,
     CasBackend,
@@ -99,8 +100,6 @@ def merge_insert_ignore(
     before the flip readers see the old snapshot, after it the new one,
     never a mixture.
     """
-    from k8e_fetch_spark.operators.dedup import insert_ignore
-
     table_dir = Path(table_dir)
     table_dir.mkdir(parents=True, exist_ok=True)
     cur_name = current_snapshot(table_dir)
@@ -279,15 +278,12 @@ def merge_insert_ignore_incremental(
     dir, no new manifest; the current name is returned unchanged, so
     retries cannot grow the table or the manifest chain).
 
-    One keyed anti-join shuffle per merge (the same plan as
-    ``insert_ignore``'s anti half — broadcastable when the batch is
-    small); write volume is the delta alone. Scale contract: merges are
-    O(delta) writes, reads are O(live dirs) opens — bound the latter
-    with :func:`checkpoint` every K merges."""
+    One keyed anti-join shuffle per merge (``insert_ignore_delta`` —
+    broadcastable when the batch is small); write volume is the delta
+    alone. Scale contract: merges are O(delta) writes, reads are
+    O(live dirs) opens — bound the latter with :func:`checkpoint`
+    every K merges."""
     import json
-    from functools import reduce
-
-    from pyspark.sql import functions as F
 
     table_dir = Path(table_dir)
     table_dir.mkdir(parents=True, exist_ok=True)
@@ -303,14 +299,7 @@ def merge_insert_ignore_incremental(
         live: list[str] = []
         next_id = 1
     else:
-        cur_df = read_manifest_table(spark, table_dir)
-        cols = cur_df.columns
-        n = new.select(*cols).distinct().alias("n")
-        cond = reduce(
-            lambda a, b: a & b,
-            [F.col(f"n.{c}").eqNullSafe(F.col(f"e.{c}")) for c in cols],
-        )
-        delta = n.join(cur_df.alias("e"), on=cond, how="left_anti")
+        delta = insert_ignore_delta(read_manifest_table(spark, table_dir), new)
         live = _manifest_dirs(table_dir, cur_name)
         next_id = int(cur_name.split("-")[1].split(".")[0]) + 1
     delta_name = f"delta-{next_id:06d}"
@@ -569,7 +558,7 @@ def merge_insert_ignore_occ(
     """op-insert-ignore MERGE safe under CONCURRENT writers: the
     incremental manifest merge with a compare-and-swap commit. Each
     attempt reads the current table, computes ``new ∖ current`` (the
-    same null-safe anti-join plan), writes the delta under a
+    null-safe ``insert_ignore_delta``), writes the delta under a
     writer-unique directory name, and tries to claim the next manifest
     version; a lost race recomputes against the winner's table and
     retries (the recompute is required for correctness — the winner may
@@ -584,9 +573,6 @@ def merge_insert_ignore_occ(
     trade."""
     import json
     import shutil
-    from functools import reduce
-
-    from pyspark.sql import functions as F
 
     table_dir = Path(table_dir)
     table_dir.mkdir(parents=True, exist_ok=True)
@@ -611,14 +597,7 @@ def merge_insert_ignore_occ(
             live: list[str] = []
             next_id = 1
         else:
-            cur_df = read_manifest_table(spark, table_dir)
-            cols = cur_df.columns
-            n = new.select(*cols).distinct().alias("n")
-            cond = reduce(
-                lambda a, b: a & b,
-                [F.col(f"n.{c}").eqNullSafe(F.col(f"e.{c}")) for c in cols],
-            )
-            delta = n.join(cur_df.alias("e"), on=cond, how="left_anti")
+            delta = insert_ignore_delta(read_manifest_table(spark, table_dir), new)
             live = _manifest_dirs(table_dir, cur_name)
             next_id = int(cur_name.split("-")[1].split(".")[0]) + 1
         delta_name = f"delta-{next_id:06d}-{os.getpid()}{os.urandom(3).hex()}"

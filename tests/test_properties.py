@@ -6,7 +6,9 @@ oracle parity can't (both sides encoding the same mistranslation)."""
 
 from __future__ import annotations
 
+import math
 import re
+import string
 
 from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -438,11 +440,50 @@ def test_gif_lzw_deferred_clear_stream_decodes():
     assert _lzw_decode(mcs, bytes(out), _MAX_PIXELS) == data
 
 
-# --- r19: quality-heuristic name forms ------------------------------
-# The one-expr parsed renderings (quality_score / punct_ratio /
-# stopword_ratio accepting a column NAME) must stay BIT-equal to the
-# Column-API forms on arbitrary text — the dual-form drift guard every
-# r18/r19 name form carries.
+# --- quality heuristics against a pure-Python model -----------------
+# The model follows Spark's semantics, not Python's: Java regex ``\s``
+# is exactly [ \t\n\x0B\f\r] (Python's would also match Unicode
+# spaces), ``trim`` strips only U+0020, ``length`` counts code points,
+# and String.split(regex, -1) keeps leading and trailing empties as
+# re.split does. Stopword membership needs only ASCII case folding: no
+# non-ASCII code point lowercases to a string of the stopwords'
+# letters. The arithmetic keeps the builders' IEEE operation order.
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+_ALNUM_SPACE = re.compile(r"[A-Za-z0-9 ]")
+
+
+def _round6(x: float) -> float:
+    return math.floor(x * 1e6 + 0.5) / 1e6
+
+
+def _spark_trim(t: str) -> str:
+    return t.strip(" ")
+
+
+def _py_punct_ratio(t: str) -> float:
+    if len(t) == 0:
+        return 0.0
+    return len(_ALNUM_SPACE.sub("", t)) / len(t)
+
+
+def _py_stopword_ratio(t: str) -> float:
+    from k8e_fetch_spark.operators.text import STOPWORDS
+
+    total = 0 if len(_spark_trim(t)) == 0 else len(_JAVA_WS.split(_spark_trim(t)))
+    if total == 0:
+        return 0.0
+    lowered = t.translate(str.maketrans(string.ascii_uppercase, string.ascii_lowercase))
+    stop = sum(tok in STOPWORDS for tok in _JAVA_WS.split(_spark_trim(lowered)))
+    return stop / total
+
+
+def _py_quality_score(t: str) -> float:
+    length_term = min(len(t) / 500.0, 1.0)
+    punct_term = 1.0 - min(_py_punct_ratio(t) * 4, 1.0)
+    stop_term = min(_py_stopword_ratio(t) * 5, 1.0)
+    return _round6(0.4 * length_term + 0.3 * punct_term + 0.3 * stop_term)
+
+
 @given(
     texts=st.lists(
         st.text(
@@ -453,8 +494,9 @@ def test_gif_lzw_deferred_clear_stream_decodes():
         max_size=12,
     )
 )
+@example(texts=["The cat\x0band\tthe DOG ", "  of\u00a0to  ", "", "!!?", " IN a "])
 @settings(max_examples=20, deadline=None)
-def test_quality_name_forms_match_column_forms(spark_session_holder, texts):
+def test_quality_heuristics_match_python_model(spark_session_holder, texts):
     from k8e_fetch_spark.functions.rounding import round_fixed
     from k8e_fetch_spark.operators.text import (
         punct_ratio,
@@ -466,19 +508,14 @@ def test_quality_name_forms_match_column_forms(spark_session_holder, texts):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "i int, text string"
     )
-    a = df.select(
-        "i",
-        quality_score(F.col("text")).alias("q"),
-        round_fixed(punct_ratio(F.col("text")), 6).alias("p"),
-        round_fixed(stopword_ratio(F.col("text")), 6).alias("s"),
-    )
-    b = df.select(
+    got = df.select(
         "i",
         quality_score("text").alias("q"),
         round_fixed(punct_ratio("text"), 6).alias("p"),
         round_fixed(stopword_ratio("text"), 6).alias("s"),
-    )
-    assert a.schema == b.schema
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    assert ra == rb
+    ).collect()
+    want = [
+        (i, _py_quality_score(t), _round6(_py_punct_ratio(t)), _round6(_py_stopword_ratio(t)))
+        for i, t in enumerate(texts)
+    ]
+    assert sorted(map(tuple, got)) == want

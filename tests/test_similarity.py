@@ -198,7 +198,7 @@ def test_minhash_signature_agg_matches_fold_form(spark):
     )
 
     docs = load(spark, SF_DIR, "documents").limit(300)
-    sh = docs.select(F.col("doc_id").alias("doc"), hashed_shingles(F.col("text")).alias("sh"))
+    sh = docs.select(F.col("doc_id").alias("doc"), hashed_shingles("text").alias("sh"))
     agg_sig = minhash_signature_agg(sh)
     fold_sig = sh.select(
         "doc",
@@ -406,7 +406,7 @@ def test_hashed_shingles_edge_texts(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     sh = {
         r["doc_id"]: r["s"]
-        for r in df.select("doc_id", hashed_shingles(F.col("text")).alias("s")).collect()
+        for r in df.select("doc_id", hashed_shingles("text").alias("s")).collect()
     }
     # sub-k docs: exactly one whole-text identity; equal text => equal id
     for d in (1, 2, 3, 4, 5):
@@ -970,10 +970,14 @@ def test_store_relation_bands_match_signature_agg(spark):
         F.col("doc"), F.col("sh").alias("sh_rel"), F.col("bands").alias("b_rel")
     )
     sh = docs.select(
-        F.col("doc_id").alias("doc"), hashed_shingles(F.col("text")).alias("sh")
+        F.col("doc_id").alias("doc"), hashed_shingles("text").alias("sh")
     )
-    ref = minhash_signature_agg(sh).select(
-        "doc", lsh_bands(F.col("sig"), 8, 32).alias("b_ref")
+    # the reference bands also run through a column name that needs
+    # quoting (a dot and a space) — it must resolve as one column
+    ref = (
+        minhash_signature_agg(sh)
+        .withColumnRenamed("sig", "sig.v 1")
+        .select("doc", lsh_bands("sig.v 1", 8, 32).alias("b_ref"))
     )
     ref_sh = sh.select("doc", F.sort_array(F.array_distinct("sh")).alias("sh_ref"))
     joined = rel.join(ref, on="doc").join(ref_sh, on="doc")

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from k8e_fetch_spark.operators.substring import duplicated_span_removal, merge_spans
+from k8e_fetch_spark.operators.substring import _merge_spans_sql, duplicated_span_removal
 
 
 def _run(spark, rows, min_len=4):
@@ -75,28 +75,34 @@ def test_short_docs_emit_and_cover_nothing(spark):
     assert all(got[i]["n_removed"] == 0 for i in (1, 2, 3))
 
 
+def _merge_spans_df(spark, dp):
+    arr = "CAST(array(" + ",".join(str(p) for p in dp) + ") AS array<int>)"
+    return spark.range(1).select(F.expr(_merge_spans_sql(arr, 4)).alias("sp"))
+
+
 def test_merge_spans_expression(spark):
     """The interval-merge fold: overlapping, adjacent, and disjoint
     window starts coalesce to the right half-open spans."""
-    df = spark.createDataFrame([(1,)], "id long").select(
-        merge_spans(F.array(F.lit(0), F.lit(2), F.lit(6), F.lit(20)), 4).alias("sp")
-    )
-    sp = [(s["s"], s["e"]) for s in df.collect()[0]["sp"]]
+    sp = [(s["s"], s["e"]) for s in _merge_spans_df(spark, [0, 2, 6, 20]).collect()[0]["sp"]]
     # 0->[0,4), 2 overlaps -> [0,6), 6 adjacent -> [0,10); 20 disjoint
     assert sp == [(0, 10), (20, 24)]
-    empty = spark.range(1).select(
-        merge_spans(F.array().cast("array<int>"), 4).alias("sp")
-    )
-    assert empty.collect()[0]["sp"] == []
+    assert _merge_spans_df(spark, []).collect()[0]["sp"] == []
 
 
-def test_merge_spans_sql_twin_matches_column_form(spark):
-    """The r18 SQL-string rendering (_merge_spans_sql — the form the
-    operator's hot path parses in one round trip) folds identically to
-    the Column-API merge_spans on overlapping/adjacent/disjoint/empty
-    position arrays."""
-    from k8e_fetch_spark.operators.substring import _merge_spans_sql
+def _py_merge_spans(dp, min_len):
+    """Textbook interval merge of the windows [p, p + min_len)."""
+    spans = []
+    for p in dp:
+        if spans and p <= spans[-1][1]:
+            spans[-1][1] = max(spans[-1][1], p + min_len)
+        else:
+            spans.append([p, p + min_len])
+    return [tuple(sp) for sp in spans]
 
+
+def test_merge_spans_matches_python_interval_merge(spark):
+    """The span fold equals a pure-Python interval merge on
+    overlapping/adjacent/disjoint/empty position arrays."""
     cases = [
         [0, 2, 6, 20],
         [],
@@ -105,19 +111,5 @@ def test_merge_spans_sql_twin_matches_column_form(spark):
         [0, 8, 16, 17, 40],
     ]
     for dp in cases:
-        arr = (
-            F.array(*[F.lit(p) for p in dp]) if dp else F.array()
-        ).cast("array<int>")
-        df = spark.range(1).select(
-            merge_spans(arr, 4).alias("col_form"),
-            F.expr(
-                _merge_spans_sql(
-                    "CAST(array(" + ",".join(str(p) for p in dp) + ") AS array<int>)"
-                    if dp
-                    else "CAST(array() AS array<int>)",
-                    4,
-                )
-            ).alias("sql_form"),
-        )
-        row = df.collect()[0]
-        assert row["col_form"] == row["sql_form"], dp
+        got = [(s["s"], s["e"]) for s in _merge_spans_df(spark, dp).collect()[0]["sp"]]
+        assert got == _py_merge_spans(dp, 4), dp

@@ -96,7 +96,7 @@ def test_registered_domain_psl_fold(spark):
     ]
     df = spark.createDataFrame(cases, "host string, want string")
     bad = df.select(
-        "want", registered_domain_psl(F.col("host")).alias("got")
+        "want", registered_domain_psl("host").alias("got")
     ).filter(F.col("want") != F.col("got"))
     assert bad.count() == 0, bad.collect()
 
@@ -146,26 +146,9 @@ def test_canonical_url_pinned_cases(spark):
 
     df = spark.createDataFrame([(i, raw) for i, (raw, _) in enumerate(CANON_CASES)],
                                "i int, url string")
-    got = {r["i"]: r["c"] for r in df.select("i", canonical_url(F.col("url")).alias("c")).collect()}
+    got = {r["i"]: r["c"] for r in df.select("i", canonical_url("url").alias("c")).collect()}
     for i, (raw, want) in enumerate(CANON_CASES):
         assert got[i] == want, (raw, got[i], want)
-
-
-def test_canonical_url_name_form_matches_column_form(spark):
-    """r19 one-expr name form: same pinned cases, bit equality with the
-    Column form (the dual-form drift guard the r18 name forms carry)."""
-    from k8e_fetch_spark.operators.web import canonical_url
-
-    df = spark.createDataFrame(
-        [(i, raw) for i, (raw, _) in enumerate(CANON_CASES)],
-        "i int, url string",
-    )
-    a = df.select("i", canonical_url(F.col("url")).alias("c"))
-    b = df.select("i", canonical_url("url").alias("c"))
-    assert a.schema == b.schema
-    ra = {r["i"]: r["c"] for r in a.collect()}
-    rb = {r["i"]: r["c"] for r in b.collect()}
-    assert ra == rb
 
 
 def test_sql_canonical_url_twin_matches_spark(spark):
@@ -271,8 +254,6 @@ def test_canonical_url_spark_matches_urllib_reference_on_seeded_batch(spark_hold
     per-example fuzz above runs the cheap SQL twin)."""
     import random
 
-    from pyspark.sql import functions as F
-
     from k8e_fetch_spark.operators.web import canonical_url
 
     rng = random.Random(1414)
@@ -295,7 +276,7 @@ def test_canonical_url_spark_matches_urllib_reference_on_seeded_batch(spark_hold
     df = spark_holder.createDataFrame([(i, u) for i, u in enumerate(urls)], "i int, url string")
     got = {
         r["i"]: r["c"]
-        for r in df.select("i", canonical_url(F.col("url")).alias("c")).collect()
+        for r in df.select("i", canonical_url("url").alias("c")).collect()
     }
     for i, u in enumerate(urls):
         assert got[i] == _py_canonical(u), u
