@@ -309,6 +309,8 @@ def _decode_gif_blocks(data: bytes) -> tuple[int, int, int, list[bytes]]:
     if len(data) < 13 or data[:4] != b"GIF8" or data[4:6] not in (b"7a", b"9a"):
         raise ValueError("not a GIF")
     w, h, packed, bg, _ = struct.unpack("<HHBBB", data[6:13])
+    if w == 0 or h == 0:
+        raise ValueError("GIF: zero-area logical screen")
     if w * h > _MAX_PIXELS:
         raise ValueError("GIF: declared size exceeds cap")
     pos = 13
@@ -319,7 +321,7 @@ def _decode_gif_blocks(data: bytes) -> tuple[int, int, int, list[bytes]]:
         pos += 3 * n
     bg_rgb = global_pal[bg] if bg < len(global_pal) else b"\x00\x00\x00"
     bg_px = np.frombuffer(bg_rgb.ljust(3, b"\x00"), dtype=np.uint8)
-    canvas = np.broadcast_to(bg_px, (h, w, 3)).copy() if w * h else np.zeros((h, w, 3), np.uint8)
+    canvas = np.broadcast_to(bg_px, (h, w, 3)).copy()
     frames: list[bytes] = []
     transparent: int | None = None
     disposal = 0

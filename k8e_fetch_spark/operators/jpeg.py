@@ -559,6 +559,8 @@ def _decode_jpeg_markers(data: bytes) -> tuple[int, int, int, np.ndarray]:
             prec, fh, fw, nc = struct.unpack(">BHHB", body[:6])
             if prec != 8:
                 raise ValueError("JPEG: only 8-bit precision supported")
+            if fh == 0 or fw == 0:  # includes DNL-deferred height
+                raise ValueError("JPEG: zero image dimension")
             if fh * fw > _MAX_PIXELS:
                 raise ValueError("JPEG: declared size exceeds cap")
             comps = []

@@ -1,20 +1,29 @@
 """Multimodal column operators (SURVEY.md §2.6).
 
 Images/audio/video are opaque ``binary`` columns with typed metadata
-alongside. The Spark-side plumbing — schemas, Arrow-batched
-``mapInPandas`` decode stages, batch shapes, partition sizing — is real
-and tested. TWO codecs sit behind it:
+alongside. Every decode stage is one Arrow-batched ``mapInPandas`` hop
+built by :func:`_media_stage`, which owns the batch loop and the
+quarantine row; a stage supplies only its output schema, a per-payload
+decode and the exceptions that mark a payload as undecodable. The
+codecs behind the stages are stdlib + numpy:
 
-- :func:`decode_media` — deterministic stub (the oracle twin: its
-  outputs are pure functions of the payload bytes, SQL-recomputable);
-- :func:`decode_media_png` — a REAL image decode: stdlib PNG codec
-  (:mod:`k8e_fetch_spark.operators.png` — DEFLATE, CRC, all five
-  predictor filters), emitting actual pixel statistics;
-- :func:`decode_media_wav` — a REAL audio decode: stdlib RIFF/PCM
-  parse (:mod:`k8e_fetch_spark.operators.wav`), emitting exact sample
-  statistics. Video remains the one stubbed modality (no ffmpeg in
-  this container); a deployment swaps the per-payload call, the plan
-  is unchanged.
+- :func:`decode_media` and :func:`resize_media` — deterministic stubs
+  whose outputs are pure functions of the payload bytes (the oracle
+  twins: SQL-recomputable);
+- :func:`decode_media_png`, :func:`decode_media_jpeg` and
+  :func:`decode_media_gif` — real image decodes
+  (:mod:`~k8e_fetch_spark.operators.png`,
+  :mod:`~k8e_fetch_spark.operators.jpeg`,
+  :mod:`~k8e_fetch_spark.operators.gif`) emitting statistics of the
+  decoded pixels; :func:`decode_media_gif_frames` emits one row per
+  GIF frame;
+- :func:`decode_media_wav` — a real RIFF/PCM decode
+  (:mod:`~k8e_fetch_spark.operators.wav`) emitting sample statistics;
+- :func:`decode_media_avi` — a real RIFF/AVI container walk
+  (:mod:`~k8e_fetch_spark.operators.avi`); the per-frame pixel
+  payloads stay opaque;
+- :func:`resize_media_real` — PNG/JPEG decode, box resample, PNG
+  re-encode.
 
 Scale notes (100 TB of media): decode runs inside ``mapInPandas`` with
 an iterator signature, so one task streams many Arrow batches without
@@ -27,8 +36,9 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -65,13 +75,10 @@ def sniff_media_format(payload_col):
     of the decode stages AND the quarantine reason: a payload that
     sniffs ``jpeg`` but lands in the PNG decoder's null-metadata rows
     is 'unsupported format', not 'corrupt data' — distinguishable
-    without decoding a single byte in Python.
-
-    JPEG (baseline) decodes for real since round 6
-    (:func:`decode_media_jpeg`, operators/jpeg.py); a JPEG payload
-    routed to the PNG decoder still quarantines with this sniff as the
-    distinguishable reason, and non-baseline JPEG processes
-    (progressive etc.) quarantine inside the JPEG decoder itself.
+    without decoding a single byte in Python. A payload that sniffs as
+    its stage's own format and still quarantines (truncation, or a
+    non-baseline JPEG process) is corrupt or unsupported inside that
+    format.
     """
     c = F.col(payload_col) if isinstance(payload_col, str) else payload_col
     head = F.substring(c, 1, 4)
@@ -88,6 +95,88 @@ def sniff_media_format(payload_col):
         )
         .otherwise(F.lit("unknown"))
     )
+
+
+def _media_stage(
+    df: DataFrame,
+    schema: StructType,
+    decode_one: Callable[[bytes], Sequence[tuple]],
+    errors: tuple[type[BaseException], ...] = (),
+    id_col: str = "doc_id",
+    payload_col: str = "payload",
+) -> DataFrame:
+    """One ``mapInPandas`` hop: ``decode_one(payload)`` returns the
+    output rows for one payload, each without its leading ``doc_id``
+    (which this runner prepends), in ``schema`` field order; a stage
+    that fans out returns several, the others exactly one. One pandas
+    frame is yielded per Arrow batch.
+
+    Quarantine contract: a payload whose decode raises one of
+    ``errors`` yields exactly one row, built from ``schema`` —
+    ``byte_len`` (where the schema has it) is ``len(payload)``, array
+    fields are ``[]`` and every other field is NULL — so at 100 TB a
+    corrupt payload is accounted for instead of killing the job. Any
+    other exception fails the task: ``errors`` is each stage's exact
+    statement of what a bad payload raises, never a broad catch.
+    """
+    names = schema.fieldNames()
+    tail_fields = schema.fields[1:]
+
+    def quarantine(payload: bytes) -> tuple:
+        return tuple(
+            len(payload) if f.name == "byte_len"
+            else [] if isinstance(f.dataType, ArrayType)
+            else None
+            for f in tail_fields
+        )
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+                payload = bytes(payload)
+                try:
+                    tails = decode_one(payload)
+                except errors:
+                    tails = [quarantine(payload)]
+                rows.extend((int(doc_id), *tail) for tail in tails)
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(run, schema)
+
+
+def _pixel_stats(a: np.ndarray) -> list[float]:
+    """The 8 image features of an ``(n_px, ch)`` uint8 pixel array, ch
+    1..4 (gray, gray+alpha, RGB, RGBA): ``[mean_r, mean_g, mean_b,
+    mean_rgb, min_rgb, max_rgb, frac_zero_bytes, mean_alpha]``, all /255
+    except ``frac_zero``. Gray maps its one channel to r=g=b; without
+    alpha ``mean_alpha = 1.0``. Every sum and count is an exact int64,
+    so each feature is one correctly rounded int / int quotient — bit
+    for bit what a float64 mean over the same pixels gives. ``n_px``
+    must be positive: the codecs reject zero-area images."""
+    n_px, ch = a.shape
+    color = a[:, :3] if ch >= 3 else a[:, :1]
+    sums = [int(s) for s in color.sum(axis=0, dtype=np.int64)]
+    means = [s / n_px / 255.0 for s in sums]
+    if ch < 3:
+        means *= 3
+    alpha = int(a[:, -1].sum(dtype=np.int64)) / n_px / 255.0 if ch in (2, 4) else 1.0
+    n = color.size
+    return [
+        *means,
+        sum(sums) / n / 255.0,
+        int(color.min()) / 255.0,
+        int(color.max()) / 255.0,
+        int((color == 0).sum()) / n,
+        alpha,
+    ]
+
+
+def _mean_byte(buf: bytes) -> int:
+    """Mean of a non-empty byte buffer, rounded half-to-even: an exact
+    int sum over the length, so it equals ``round(sum(buf) / len(buf))``."""
+    a = np.frombuffer(buf, dtype=np.uint8)
+    return round(int(a.sum(dtype=np.int64)) / a.size)
 
 
 def _fake_decode(payload: bytes) -> tuple[int, int, int, list[float]]:
@@ -116,22 +205,13 @@ def decode_media(df: DataFrame, id_col: str = "doc_id", payload_col: str = "payl
     whole partition; the returned frame conforms to
     ``MEDIA_FEATURES_SCHEMA`` so downstream plans are fully typed.
     """
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [_fake_decode(p) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "byte_len": [len(p) for p in pdf[payload_col]],
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "n_frames": [d[2] for d in decoded],
-                    "features": [d[3] for d in decoded],
-                }
-            )
-
-    return df.mapInPandas(decode_batches, MEDIA_FEATURES_SCHEMA)
+    return _media_stage(
+        df,
+        MEDIA_FEATURES_SCHEMA,
+        lambda payload: [(len(payload), *_fake_decode(payload))],
+        id_col=id_col,
+        payload_col=payload_col,
+    )
 
 
 def decode_media_png(
@@ -141,70 +221,23 @@ def decode_media_png(
     :func:`decode_media`: each binary payload is parsed as an actual
     PNG (chunk stream, CRC check, DEFLATE inflate, predictor
     unfiltering — :func:`k8e_fetch_spark.operators.png.decode_png`) and
-    the features are statistics of the DECODED PIXELS:
-
-    ``[mean_r, mean_g, mean_b, mean_rgb, min_rgb, max_rgb,
-    frac_zero_bytes, mean_alpha]`` — all /255 except ``frac_zero``;
-    grayscale maps the one channel to r=g=b; images without alpha get
-    ``mean_alpha = 1.0``. Payloads that are not decodable PNGs yield a
-    null-dims row (width/height/n_frames NULL, empty features) instead
-    of failing the task — at 100 TB a corrupt file must quarantine, not
-    kill the job.
-    """
+    the features are :func:`_pixel_stats` of the DECODED PIXELS.
+    Payloads that are not decodable PNGs quarantine."""
     from k8e_fetch_spark.operators.png import decode_png
 
-    def stats(pixels: bytes, ch: int) -> list[float]:
-        # numpy column sums — integer accumulations, so every derived
-        # float is bit-identical to the byte-slice loops this replaces
-        # (sum/min/max/count are order-invariant; the exact int / int
-        # divisions round identically)
-        import numpy as np
+    def decode_one(payload: bytes) -> list[tuple]:
+        w, h, ch, pixels = decode_png(payload)
+        a = np.frombuffer(pixels, dtype=np.uint8).reshape(-1, ch)
+        return [(len(payload), w, h, 1, _pixel_stats(a))]
 
-        n_px = len(pixels) // ch
-        if n_px == 0:
-            return [0.0] * N_FEATURES
-        a = np.frombuffer(pixels[: n_px * ch], dtype=np.uint8).reshape(n_px, ch)
-        sums = a.sum(axis=0, dtype=np.int64)
-        if ch >= 3:
-            rgb_idx = (0, 1, 2)
-            alpha = int(sums[3]) / n_px / 255.0 if ch == 4 else 1.0
-        else:
-            rgb_idx = (0, 0, 0)
-            alpha = int(sums[1]) / n_px / 255.0 if ch == 2 else 1.0
-        means = [int(sums[i]) / n_px / 255.0 for i in rgb_idx]
-        rgb = a[:, list(rgb_idx[: min(ch, 3)])]
-        n_rgb = rgb.size
-        return [
-            means[0],
-            means[1],
-            means[2],
-            int(rgb.sum(dtype=np.int64)) / n_rgb / 255.0,
-            int(rgb.min()) / 255.0,
-            int(rgb.max()) / 255.0,
-            int((rgb == 0).sum()) / n_rgb,
-            alpha,
-        ]
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload)
-                try:
-                    w, h, ch, pixels = decode_png(payload)
-                    rows.append(
-                        (int(doc_id), len(payload), w, h, 1, stats(pixels, ch))
-                    )
-                except (ValueError, zlib.error, struct.error):
-                    rows.append((int(doc_id), len(payload), None, None, None, []))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "byte_len", "width", "height", "n_frames", "features",
-                ],
-            )
-
-    return df.mapInPandas(decode_batches, MEDIA_FEATURES_SCHEMA)
+    return _media_stage(
+        df,
+        MEDIA_FEATURES_SCHEMA,
+        decode_one,
+        (ValueError, zlib.error, struct.error),
+        id_col,
+        payload_col,
+    )
 
 
 def decode_media_jpeg(
@@ -214,52 +247,25 @@ def decode_media_jpeg(
     :func:`decode_media_png`: each payload is entropy-decoded,
     dequantized, inverse-DCT'd and color-converted by the stdlib+numpy
     codec (:func:`k8e_fetch_spark.operators.jpeg.decode_jpeg`), and
-    the features are statistics of the DECODED PIXELS — the same
-    8-feature layout as the PNG stage (``mean_r/g/b, mean_rgb,
-    min_rgb, max_rgb, frac_zero_bytes, mean_alpha``; JPEG has no
-    alpha, so ``mean_alpha = 1.0``; grayscale maps its one channel to
-    r=g=b). Non-baseline processes (progressive, arithmetic, 12-bit),
-    truncation and garbage raise inside the codec and yield a
-    null-dims quarantine row — at 100 TB a corrupt payload must
-    quarantine, not kill the job."""
-    import numpy as np
-
+    the features are :func:`_pixel_stats` of the DECODED PIXELS (JPEG
+    has no alpha, so ``mean_alpha = 1.0``). Non-baseline processes
+    (progressive, arithmetic, 12-bit), truncation and garbage raise
+    inside the codec and quarantine."""
     from k8e_fetch_spark.operators.jpeg import decode_jpeg
 
-    def stats(px: "np.ndarray") -> list[float]:
-        if px.ndim == 2:
-            px = np.stack([px, px, px], axis=-1)
-        flat = px.reshape(-1, 3).astype(np.float64)
-        means = flat.mean(axis=0) / 255.0
-        return [
-            float(means[0]),
-            float(means[1]),
-            float(means[2]),
-            float(flat.mean() / 255.0),
-            float(flat.min() / 255.0),
-            float(flat.max() / 255.0),
-            float((flat == 0).mean()),
-            1.0,
-        ]
+    def decode_one(payload: bytes) -> list[tuple]:
+        w, h, _nc, px = decode_jpeg(payload)
+        a = px.reshape(w * h, -1)
+        return [(len(payload), w, h, 1, _pixel_stats(a))]
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload)
-                try:
-                    w, h, _nc, px = decode_jpeg(payload)
-                    rows.append((int(doc_id), len(payload), w, h, 1, stats(px)))
-                except (ValueError, struct.error, IndexError):
-                    rows.append((int(doc_id), len(payload), None, None, None, []))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "byte_len", "width", "height", "n_frames", "features",
-                ],
-            )
-
-    return df.mapInPandas(decode_batches, MEDIA_FEATURES_SCHEMA)
+    return _media_stage(
+        df,
+        MEDIA_FEATURES_SCHEMA,
+        decode_one,
+        (ValueError, struct.error, IndexError),
+        id_col,
+        payload_col,
+    )
 
 
 # Decoded-audio feature schema: container metadata + sample statistics.
@@ -284,14 +290,12 @@ def decode_media_wav(
     (:func:`k8e_fetch_spark.operators.wav.decode_wav`) and the features
     are statistics of the DECODED SAMPLES: ``[duration_sec,
     peak/32768, rms/32768, mean/32768, zero_crossing_fraction]``.
-    Undecodable payloads quarantine as null-metadata rows."""
+    Undecodable payloads quarantine."""
     import math
 
     from k8e_fetch_spark.operators.wav import decode_wav
 
     def stats(rate: int, channels: int, n_frames: int, samples: list[int]) -> list[float]:
-        import numpy as np
-
         n = len(samples)
         if n == 0:
             return [0.0, 0.0, 0.0, 0.0, 0.0]
@@ -299,9 +303,9 @@ def decode_media_wav(
         # counted per channel — adjacent interleaved values belong to
         # different channels, and a constant L=+x / R=-x stereo stream
         # would otherwise read as zc_frac ~= 1.0 when the truth is 0.
-        # (numpy int64 accumulations: every derived float is
-        # bit-identical to the per-sample loops this replaces — s*s
-        # sums fit int64 exactly at any plausible clip length.)
+        # int64 accumulations keep every derived float a correctly
+        # rounded quotient of exact integers (s*s sums fit int64 at any
+        # plausible clip length).
         ch = max(1, channels)
         a = np.asarray(samples, dtype=np.int64)
         zc = 0
@@ -318,34 +322,20 @@ def decode_media_wav(
             zc / n_steps if n_steps else 0.0,
         ]
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload)
-                try:
-                    rate, channels, n_frames, samples = decode_wav(payload)
-                    rows.append(
-                        (
-                            int(doc_id),
-                            len(payload),
-                            rate,
-                            channels,
-                            n_frames,
-                            stats(rate, channels, n_frames, samples),
-                        )
-                    )
-                except (ValueError, struct.error, EOFError):
-                    rows.append((int(doc_id), len(payload), None, None, None, []))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "byte_len", "sample_rate", "n_channels",
-                    "n_frames", "features",
-                ],
-            )
+    def decode_one(payload: bytes) -> list[tuple]:
+        rate, channels, n_frames, samples = decode_wav(payload)
+        return [
+            (len(payload), rate, channels, n_frames, stats(rate, channels, n_frames, samples))
+        ]
 
-    return df.mapInPandas(decode_batches, AUDIO_FEATURES_SCHEMA)
+    return _media_stage(
+        df,
+        AUDIO_FEATURES_SCHEMA,
+        decode_one,
+        (ValueError, struct.error, EOFError),
+        id_col,
+        payload_col,
+    )
 
 
 RESIZED_SCHEMA = StructType(
@@ -366,48 +356,24 @@ def decode_media_gif(
     (logical screen, palettes, variable-width LZW, interlacing —
     :func:`k8e_fetch_spark.operators.gif.decode_gif`). ``n_frames`` is
     the REAL frame count (GIF is the multi-frame image container), and
-    the 8 features are pixel statistics of the FIRST frame in the PNG
-    stage's layout (GIF has no alpha channel -> ``mean_alpha = 1.0``).
-    Malformed payloads quarantine as null-dims rows."""
+    the 8 features are :func:`_pixel_stats` of the FIRST frame (GIF has
+    no alpha channel -> ``mean_alpha = 1.0``). Malformed payloads
+    quarantine."""
     from k8e_fetch_spark.operators.gif import decode_gif
 
-    def stats(rgb: bytes) -> list[float]:
-        import numpy as np
+    def decode_one(payload: bytes) -> list[tuple]:
+        w, h, n_frames, frames = decode_gif(payload)
+        a = np.frombuffer(frames[0], dtype=np.uint8).reshape(-1, 3)
+        return [(len(payload), w, h, n_frames, _pixel_stats(a))]
 
-        n = len(rgb) // 3
-        a = np.frombuffer(rgb[: n * 3], dtype=np.uint8).reshape(n, 3)
-        sums = a.sum(axis=0, dtype=np.int64)  # exact int: floats bit-match the loops
-        return [
-            int(sums[0]) / n / 255.0,
-            int(sums[1]) / n / 255.0,
-            int(sums[2]) / n / 255.0,
-            int(sums.sum()) / (n * 3) / 255.0,
-            int(a.min()) / 255.0,
-            int(a.max()) / 255.0,
-            int((a == 0).sum()) / (n * 3),
-            1.0,
-        ]
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload)
-                try:
-                    w, h, n_frames, frames = decode_gif(payload)
-                    rows.append(
-                        (int(doc_id), len(payload), w, h, n_frames, stats(frames[0]))
-                    )
-                except (ValueError, struct.error, IndexError):
-                    rows.append((int(doc_id), len(payload), None, None, None, []))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "byte_len", "width", "height", "n_frames", "features",
-                ],
-            )
-
-    return df.mapInPandas(decode_batches, MEDIA_FEATURES_SCHEMA)
+    return _media_stage(
+        df,
+        MEDIA_FEATURES_SCHEMA,
+        decode_one,
+        (ValueError, struct.error, IndexError),
+        id_col,
+        payload_col,
+    )
 
 
 FRAME_STATS_SCHEMA = StructType(
@@ -425,33 +391,23 @@ def decode_media_gif_frames(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """Per-FRAME statistics from real GIF decodes — the one-to-many
-    decode shape (one input row fans out to n_frames output rows,
-    like the AVI frame-sampling stage). Malformed payloads quarantine
-    as a single null-frame row so the document is still accounted
-    for."""
+    decode shape (one input row fans out to n_frames output rows).
+    A malformed payload quarantines as a single null-frame row, so the
+    document is still accounted for."""
     from k8e_fetch_spark.operators.gif import decode_gif
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    w, h, _n, frames = decode_gif(bytes(payload))
-                    import numpy as np
+    def decode_one(payload: bytes) -> list[tuple]:
+        w, h, _n, frames = decode_gif(payload)
+        return [(fi, w, h, _mean_byte(rgb)) for fi, rgb in enumerate(frames)]
 
-                    for fi, rgb in enumerate(frames):
-                        a = np.frombuffer(rgb, dtype=np.uint8)
-                        # int sum / int len: bit-identical to sum(rgb)/len(rgb)
-                        rows.append(
-                            (int(doc_id), fi, w, h, int(round(int(a.sum(dtype=np.int64)) / a.size)))
-                        )
-                except (ValueError, struct.error, IndexError):
-                    rows.append((int(doc_id), None, None, None, None))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "width", "height", "mean_px"]
-            )
-
-    return df.mapInPandas(decode_batches, FRAME_STATS_SCHEMA)
+    return _media_stage(
+        df,
+        FRAME_STATS_SCHEMA,
+        decode_one,
+        (ValueError, struct.error, IndexError),
+        id_col,
+        payload_col,
+    )
 
 
 def box_resize(px, out_h: int, out_w: int):
@@ -461,8 +417,6 @@ def box_resize(px, out_h: int, out_w: int):
     constant image resizes to the identical constant (what makes the
     driver oracle exact); upscales degenerate to >=1-pixel boxes
     (nearest). Pure numpy, importable on executors."""
-    import numpy as np
-
     px = np.asarray(px)
     h, w = px.shape[:2]
     if out_h < 1 or out_w < 1 or h < 1 or w < 1:
@@ -470,10 +424,10 @@ def box_resize(px, out_h: int, out_w: int):
     ys = (np.arange(out_h + 1) * h) // out_h
     xs = (np.arange(out_w + 1) * w) // out_w
     # integral image: every box sum is four corner lookups, fully
-    # vectorized (replaces a per-output-pixel Python loop). Box sums
-    # are EXACT int64 (pixels <=255, so no float accumulation), hence
-    # sum/area reproduces the per-block float64 mean bit-for-bit —
-    # both are correctly-rounded quotients of the same exact integers.
+    # vectorized. Box sums are EXACT int64 (pixels <=255, so no float
+    # accumulation), hence sum/area equals the per-block float64 mean
+    # bit-for-bit — both are correctly-rounded quotients of the same
+    # exact integers.
     squeeze = px.ndim == 2
     p3 = px[..., None] if squeeze else px
     integral = np.zeros((h + 1, w + 1, p3.shape[2]), dtype=np.int64)
@@ -514,49 +468,42 @@ def resize_media_real(
     magic bytes, decode with the real codec (baseline JPEG or PNG),
     box-average to ``target``, and re-encode the thumbnail as PNG
     (lossless, so the thumbnail is exactly the resampled pixels). The
-    two-hop Arrow shape of :func:`resize_media` with the stub swapped
-    for the actual decode->resample->encode chain; undecodable
-    payloads quarantine as null-dims rows."""
-    import numpy as np
-
+    Arrow shape of :func:`resize_media` with the stub swapped for the
+    actual decode->resample->encode chain; undecodable payloads
+    quarantine."""
     from k8e_fetch_spark.operators.jpeg import decode_jpeg
     from k8e_fetch_spark.operators.png import decode_png, encode_png
 
     out_w, out_h = target
     color_type = {1: 0, 2: 4, 3: 2, 4: 6}
 
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload)
-                try:
-                    if payload[:4] == b"\x89PNG":
-                        w, h, ch, raw = decode_png(payload)
-                        px = np.frombuffer(raw, dtype=np.uint8).reshape(h, w, ch)
-                    elif payload[:3] == b"\xff\xd8\xff":
-                        _w, _h, ch, px = decode_jpeg(payload)
-                        if px.ndim == 2:
-                            px = px[:, :, None]
-                    else:
-                        raise ValueError("unsupported container")
-                    small = box_resize(px, out_h, out_w)
-                    thumb = encode_png(
-                        out_w, out_h, small.tobytes(), color_type=color_type[small.shape[2]]
-                    )
-                    # re-decode our own thumbnail: the emitted bytes are
-                    # proven decodable and exactly the resampled pixels
-                    _, _, _, back = decode_png(thumb)
-                    mean_px = int(round(sum(back) / len(back)))
-                    rows.append((int(doc_id), out_w, out_h, thumb, mean_px))
-                except (ValueError, zlib.error, struct.error, IndexError):
-                    rows.append((int(doc_id), None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "out_width", "out_height", "thumbnail", "mean_px"],
-            )
+    def decode_one(payload: bytes) -> list[tuple]:
+        if payload[:4] == b"\x89PNG":
+            w, h, ch, raw = decode_png(payload)
+            px = np.frombuffer(raw, dtype=np.uint8).reshape(h, w, ch)
+        elif payload[:3] == b"\xff\xd8\xff":
+            _w, _h, ch, px = decode_jpeg(payload)
+            if px.ndim == 2:
+                px = px[:, :, None]
+        else:
+            raise ValueError("unsupported container")
+        small = box_resize(px, out_h, out_w)
+        thumb = encode_png(
+            out_w, out_h, small.tobytes(), color_type=color_type[small.shape[2]]
+        )
+        # re-decode our own thumbnail: the emitted bytes are proven
+        # decodable and exactly the resampled pixels
+        _, _, _, back = decode_png(thumb)
+        return [(out_w, out_h, thumb, _mean_byte(back))]
 
-    return df.mapInPandas(resize_batches, RESIZE_REAL_SCHEMA)
+    return _media_stage(
+        df,
+        RESIZE_REAL_SCHEMA,
+        decode_one,
+        (ValueError, zlib.error, struct.error, IndexError),
+        id_col,
+        payload_col,
+    )
 
 
 def resize_media(
@@ -570,26 +517,17 @@ def resize_media(
     slice standing in for PIL ``Image.resize``); the real plumbing —
     binary in, fixed-dims + binary out, iterator batching — is what a
     production codec drops into."""
-
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w, h = target
-        for pdf in batches:
-            payloads = [bytes(p) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "out_width": w,
-                    "out_height": h,
-                    # stub "resample": deterministic strided byte sample of
-                    # the payload, sized like a w*h/8 thumbnail
-                    "thumbnail": [
-                        p[:: max(1, len(p) // max(1, (w * h) // 8))] if p else b""
-                        for p in payloads
-                    ],
-                }
-            )
-
-    return df.mapInPandas(resize_batches, RESIZED_SCHEMA)
+    w, h = target
+    # stub "resample": deterministic strided byte sample of the
+    # payload, sized like a w*h/8 thumbnail
+    step = max(1, (w * h) // 8)
+    return _media_stage(
+        df,
+        RESIZED_SCHEMA,
+        lambda p: [(w, h, p[:: max(1, len(p) // step)])],
+        id_col=id_col,
+        payload_col=payload_col,
+    )
 
 
 def frame_sample(df: DataFrame, every_nth: int = 2) -> DataFrame:
@@ -630,8 +568,7 @@ def decode_media_avi(
     runs over the REAL frame index (every ``sample_every``-th frame).
     Only the per-frame pixel codec stays out (the '00dc' payloads are
     opaque) — production frame sampling skips decoding unsampled
-    frames exactly the same way. Undecodable payloads quarantine as
-    null-metadata rows."""
+    frames exactly the same way. Undecodable payloads quarantine."""
     # Validate config at plan time: a sample_every of 0 would raise
     # inside the per-row try and silently quarantine EVERY row — a
     # config error must fail loudly, not read as 100% data corruption.
@@ -639,35 +576,25 @@ def decode_media_avi(
         raise ValueError(f"sample_every must be >= 1, got {sample_every}")
     from k8e_fetch_spark.operators.avi import decode_avi
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                payload = bytes(payload)
-                try:
-                    w, h, uspf, n, sizes = decode_avi(payload)
-                    rows.append(
-                        (
-                            int(doc_id),
-                            len(payload),
-                            w,
-                            h,
-                            n,
-                            uspf * n,
-                            list(range(0, n, sample_every)),
-                            (sum(sizes) / n) if n else 0.0,
-                        )
-                    )
-                except (ValueError, struct.error):
-                    rows.append(
-                        (int(doc_id), len(payload), None, None, None, None, [], None)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "byte_len", "width", "height", "n_frames",
-                    "duration_us", "sampled_frames", "mean_frame_bytes",
-                ],
+    def decode_one(payload: bytes) -> list[tuple]:
+        w, h, uspf, n, sizes = decode_avi(payload)
+        return [
+            (
+                len(payload),
+                w,
+                h,
+                n,
+                uspf * n,
+                list(range(0, n, sample_every)),
+                (sum(sizes) / n) if n else 0.0,
             )
+        ]
 
-    return df.mapInPandas(decode_batches, VIDEO_FEATURES_SCHEMA)
+    return _media_stage(
+        df,
+        VIDEO_FEATURES_SCHEMA,
+        decode_one,
+        (ValueError, struct.error),
+        id_col,
+        payload_col,
+    )

@@ -269,6 +269,8 @@ def _decode_png_chunks(data: bytes) -> tuple[int, int, int, bytes]:
             width, height, depth, color_type, comp, filt, interlace = struct.unpack(
                 ">IIBBBBB", body
             )
+            if width == 0 or height == 0:
+                raise ValueError("PNG: zero image dimension")
             if depth not in (8, 16) or (depth == 16 and color_type == 3):
                 raise ValueError(f"unsupported bit depth {depth}")
             if color_type not in _CHANNELS:

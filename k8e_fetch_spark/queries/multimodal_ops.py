@@ -3,12 +3,68 @@ and the Arrow-batched decode pipeline (rows-only; deterministic stub)."""
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from k8e_fetch_spark.io import load
 from k8e_fetch_spark.operators.multimodal import decode_media, frame_sample
 from k8e_fetch_spark.queries.registry import register
+
+
+def _synth_payloads(docs: DataFrame, make_payload: Callable[[int], bytes]) -> DataFrame:
+    """``(doc_id, payload)`` with ``payload = make_payload(doc_id)``,
+    built on the executors in one ``mapInPandas`` hop. Every real-codec
+    query plants its media as a pure function of ``doc_id``, so its
+    oracle states the decoded values relationally on the same id."""
+    import pandas as pd
+
+    def synth(batches):
+        for pdf in batches:
+            payloads = [make_payload(int(i)) for i in pdf["doc_id"]]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
+    return docs.select("doc_id").mapInPandas(synth, "doc_id long, payload binary")
+
+
+def _pixel_feature_ints(decoded: DataFrame) -> DataFrame:
+    """Integer-exact serialization of the image-stage features (same
+    rationale as mm_decode_features): f0..f5 and f7 recover the 0..255
+    channel statistics, f6 counts the zero channels of 3."""
+    return decoded.select(
+        "doc_id",
+        "width",
+        "height",
+        "n_frames",
+        *[
+            F.floor(F.col("features")[i] * (3 if i == 6 else 255) + F.lit(0.5))
+            .cast("int")
+            .alias(f"f{i}")
+            for i in range(8)
+        ],
+    )
+
+
+def _gray_jpeg(i: int) -> bytes:
+    """Doc ``i``'s constant-gray baseline JPEG (see
+    ``_DECODE_JPEG_ORACLE``): (8 + i%25) x (8 + i%19) RGB of value
+    v = 1 + (i*7)%255, 4:2:0, all-ones quantization, restart interval
+    i%3 MCUs."""
+    import numpy as np
+
+    from k8e_fetch_spark.operators.jpeg import encode_jpeg
+
+    w, h = 8 + i % 25, 8 + i % 19
+    v = 1 + (i * 7) % 255
+    ones = np.ones((8, 8))
+    return encode_jpeg(
+        np.full((h, w, 3), v, dtype=np.uint8),
+        quant_luma=ones,
+        quant_chroma=ones,
+        subsampling="4:2:0",
+        restart_interval=i % 3,
+    )
 
 
 @register(
@@ -37,11 +93,9 @@ def mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (r10) mm_resize_thumbnail retired: it was the registry's last
-# stub-backed declared query, fully superseded by mm_resize_real (the
-# REAL decode -> box-filter resample -> re-encode two-hop pipeline,
-# oracle-checked). The stub operator resize_media stays as the
-# plumbing-shape unit-test fixture (tests/test_multimodal.py).
+# The stub resize_media has no declared query: mm_resize_real covers
+# the resize hop with the real codec chain, oracle-checked. The stub
+# stays as the plumbing-shape fixture of tests/test_multimodal.py.
 
 
 # Full oracle for the decode pipeline INCLUDING the byte-histogram
@@ -161,56 +215,31 @@ def mm_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground truth stated relationally on the image parameters. This is
     the evidence the stub codec cannot give: the plan demonstrably
     handles real compressed image payloads end to end."""
-    import pandas as pd
-
     from k8e_fetch_spark.operators.multimodal import decode_media_png
+    from k8e_fetch_spark.operators.png import encode_png
 
-    docs = load(spark, sf_dir, "documents").select("doc_id")
+    def make_payload(i: int) -> bytes:
+        w, h = 4 + i % 13, 3 + i % 11
+        px = bytes((i * 7 % 256, i * 13 % 256, i * 29 % 256)) * (w * h)
+        return encode_png(w, h, px, color_type=2)
 
-    def encode_batches(batches):
-        from k8e_fetch_spark.operators.png import encode_png
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 4 + i % 13, 3 + i % 11
-                px = bytes((i * 7 % 256, i * 13 % 256, i * 29 % 256)) * (w * h)
-                payloads.append(encode_png(w, h, px, color_type=2))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    with_payload = docs.mapInPandas(encode_batches, "doc_id long, payload binary")
-    decoded = decode_media_png(with_payload)
-    # integer-exact serialization (same rationale as mm_decode_features):
-    # f0..f5, f7 recover the 0..255 channel stats; f6 counts zero channels
-    fcols = [
-        F.floor(F.col("features")[i] * 255 + F.lit(0.5)).cast("int").alias(f"f{i}")
-        for i in (0, 1, 2, 3, 4, 5)
-    ]
-    return decoded.select(
-        "doc_id",
-        "width",
-        "height",
-        "n_frames",
-        *fcols,
-        F.floor(F.col("features")[6] * 3 + F.lit(0.5)).cast("int").alias("f6"),
-        F.floor(F.col("features")[7] * 255 + F.lit(0.5)).cast("int").alias("f7"),
-    )
+    docs = load(spark, sf_dir, "documents")
+    return _pixel_feature_ints(decode_media_png(_synth_payloads(docs, make_payload)))
 
 
 # Real-JPEG decode with a FULL oracle. Payloads are genuine baseline
-# JFIF JPEGs built on executors as a pure function of doc_id: an
-# (8 + id%25) x (8 + id%19) RGB image of the constant GRAY color
-# v = 1 + (id*7)%255 on all three channels, encoded 4:2:0 with
-# all-ones quantization and a restart interval of id%3 MCUs (0 = no
-# DRI). Gray constants make the decode EXACT end to end: Y == v
-# up to float epsilon (the RGB->YCbCr luma weights sum to 1), both
-# chroma planes sit at 128 ± 1e-7 so their quantized DC is exactly 0,
-# and a constant block has only a DC coefficient, which all-ones
-# quantization preserves — so the entropy decode, dequant, IDCT,
-# chroma upsample and YCbCr->RGB conversion must all be right to
-# reproduce v on every pixel. Lossy-table and gradient-image accuracy
-# is pinned separately in tests/test_multimodal.py.
+# JFIF JPEGs built on executors by _gray_jpeg: an (8 + id%25) x
+# (8 + id%19) RGB image of the constant GRAY color v = 1 + (id*7)%255
+# on all three channels, encoded 4:2:0 with all-ones quantization and
+# a restart interval of id%3 MCUs (0 = no DRI). Gray constants make the
+# decode EXACT end to end: Y == v up to float epsilon (the RGB->YCbCr
+# luma weights sum to 1), both chroma planes sit at 128 ± 1e-7 so their
+# quantized DC is exactly 0, and a constant block has only a DC
+# coefficient, which all-ones quantization preserves — so the entropy
+# decode, dequant, IDCT, chroma upsample and YCbCr->RGB conversion must
+# all be right to reproduce v on every pixel. Lossy-table and
+# gradient-image accuracy is pinned separately in
+# tests/test_multimodal.py.
 _DECODE_JPEG_ORACLE = """
     WITH base AS (
         SELECT doc_id,
@@ -242,58 +271,16 @@ _DECODE_JPEG_ORACLE = """
 def mm_decode_jpeg_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ACTUAL baseline-JPEG bytes through the decode stage: executors
     encode a real JFIF JPEG per document (stdlib+numpy codec — DCT,
-    Huffman entropy coding, 4:2:0 chroma subsampling, restart markers
-    on every third document), then ``decode_media_jpeg`` parses the
+    Huffman entropy coding, 4:2:0 chroma subsampling, a restart
+    interval of doc_id % 3 MCUs), then ``decode_media_jpeg`` parses the
     marker stream, entropy-decodes, dequantizes, inverse-DCTs and
     color-converts back — hash-checked against ground truth stated
-    relationally on the image parameters. Closes the engine's last
-    documented codec boundary (the web's most common image format);
-    the quarantine path for non-baseline processes is pinned in
-    tests/test_multimodal.py."""
-    import numpy as np
-    import pandas as pd
-
+    relationally on the image parameters. The quarantine path for
+    non-baseline processes is pinned in tests/test_multimodal.py."""
     from k8e_fetch_spark.operators.multimodal import decode_media_jpeg
 
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-
-    def encode_batches(batches):
-        from k8e_fetch_spark.operators.jpeg import encode_jpeg
-
-        ones = np.ones((8, 8))
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 8 + i % 25, 8 + i % 19
-                v = 1 + (i * 7) % 255
-                img = np.full((h, w, 3), v, dtype=np.uint8)
-                payloads.append(
-                    encode_jpeg(
-                        img,
-                        quant_luma=ones,
-                        quant_chroma=ones,
-                        subsampling="4:2:0",
-                        restart_interval=i % 3,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    with_payload = docs.mapInPandas(encode_batches, "doc_id long, payload binary")
-    decoded = decode_media_jpeg(with_payload)
-    fcols = [
-        F.floor(F.col("features")[i] * 255 + F.lit(0.5)).cast("int").alias(f"f{i}")
-        for i in (0, 1, 2, 3, 4, 5)
-    ]
-    return decoded.select(
-        "doc_id",
-        "width",
-        "height",
-        "n_frames",
-        *fcols,
-        F.floor(F.col("features")[6] * 3 + F.lit(0.5)).cast("int").alias("f6"),
-        F.floor(F.col("features")[7] * 255 + F.lit(0.5)).cast("int").alias("f7"),
-    )
+    docs = load(spark, sf_dir, "documents")
+    return _pixel_feature_ints(decode_media_jpeg(_synth_payloads(docs, _gray_jpeg)))
 
 
 # Real-PNG VARIANT decode with a FULL oracle: the three web-PNG
@@ -338,55 +325,25 @@ def mm_decode_png_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     PNG (bpp-distance unfiltering + high-byte fold) — all built on
     executors and hash-checked against ground truth stated
     relationally on the image parameters."""
-    import pandas as pd
-
     from k8e_fetch_spark.operators.multimodal import decode_media_png
-
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-
-    def encode_batches(batches):
-        from k8e_fetch_spark.operators.png import (
-            encode_png_16bit,
-            encode_png_interlaced,
-            encode_png_palette,
-        )
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 4 + i % 19, 4 + i % 13
-                v = 1 + (i * 7) % 255
-                kind = i % 3
-                if kind == 0:
-                    payloads.append(
-                        encode_png_palette(w, h, [(v, v, v)], b"\x00" * (w * h))
-                    )
-                elif kind == 1:
-                    payloads.append(
-                        encode_png_interlaced(w, h, bytes((v, v, v)) * (w * h))
-                    )
-                else:
-                    payloads.append(
-                        encode_png_16bit(w, h, [v << 8] * (w * h * 3))
-                    )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    with_payload = docs.mapInPandas(encode_batches, "doc_id long, payload binary")
-    decoded = decode_media_png(with_payload)
-    fcols = [
-        F.floor(F.col("features")[i] * 255 + F.lit(0.5)).cast("int").alias(f"f{i}")
-        for i in (0, 1, 2, 3, 4, 5)
-    ]
-    return decoded.select(
-        "doc_id",
-        "width",
-        "height",
-        "n_frames",
-        *fcols,
-        F.floor(F.col("features")[6] * 3 + F.lit(0.5)).cast("int").alias("f6"),
-        F.floor(F.col("features")[7] * 255 + F.lit(0.5)).cast("int").alias("f7"),
+    from k8e_fetch_spark.operators.png import (
+        encode_png_16bit,
+        encode_png_interlaced,
+        encode_png_palette,
     )
+
+    def make_payload(i: int) -> bytes:
+        w, h = 4 + i % 19, 4 + i % 13
+        v = 1 + (i * 7) % 255
+        kind = i % 3
+        if kind == 0:
+            return encode_png_palette(w, h, [(v, v, v)], b"\x00" * (w * h))
+        if kind == 1:
+            return encode_png_interlaced(w, h, bytes((v, v, v)) * (w * h))
+        return encode_png_16bit(w, h, [v << 8] * (w * h * 3))
+
+    docs = load(spark, sf_dir, "documents")
+    return _pixel_feature_ints(decode_media_png(_synth_payloads(docs, make_payload)))
 
 
 # Real-GIF decode with a FULL oracle. Payloads are genuine GIF89a
@@ -433,60 +390,32 @@ def mm_decode_gif_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``decode_media_gif`` walks the block stream, LZW-decompresses,
     de-interlaces and palettes back to RGB — hash-checked against
     ground truth stated relationally on the stream parameters,
-    including the REAL frame count. Completes the image-codec set the
-    magic-byte router distinguishes (PNG / JPEG / GIF)."""
-    import pandas as pd
-
+    including the REAL frame count."""
+    from k8e_fetch_spark.operators.gif import encode_gif
     from k8e_fetch_spark.operators.multimodal import decode_media_gif
 
-    docs = load(spark, sf_dir, "documents").select("doc_id")
+    def make_payload(i: int) -> bytes:
+        w, h = 4 + i % 21, 4 + i % 17
+        v = 1 + (i * 7) % 255
+        nf = 1 + i % 4
+        return encode_gif(
+            w,
+            h,
+            [(v, v, v)],
+            [b"\x00" * (w * h)] * nf,
+            delays_cs=[5] * nf if nf > 1 else None,
+            interlace=(i % 2 == 1),
+        )
 
-    def encode_batches(batches):
-        from k8e_fetch_spark.operators.gif import encode_gif
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 4 + i % 21, 4 + i % 17
-                v = 1 + (i * 7) % 255
-                nf = 1 + i % 4
-                frame = b"\x00" * (w * h)
-                payloads.append(
-                    encode_gif(
-                        w,
-                        h,
-                        [(v, v, v)],
-                        [frame] * nf,
-                        delays_cs=[5] * nf if nf > 1 else None,
-                        interlace=(i % 2 == 1),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    with_payload = docs.mapInPandas(encode_batches, "doc_id long, payload binary")
-    decoded = decode_media_gif(with_payload)
-    fcols = [
-        F.floor(F.col("features")[i] * 255 + F.lit(0.5)).cast("int").alias(f"f{i}")
-        for i in (0, 1, 2, 3, 4, 5)
-    ]
-    return decoded.select(
-        "doc_id",
-        "width",
-        "height",
-        "n_frames",
-        *fcols,
-        F.floor(F.col("features")[6] * 3 + F.lit(0.5)).cast("int").alias("f6"),
-        F.floor(F.col("features")[7] * 255 + F.lit(0.5)).cast("int").alias("f7"),
-    )
+    docs = load(spark, sf_dir, "documents")
+    return _pixel_feature_ints(decode_media_gif(_synth_payloads(docs, make_payload)))
 
 
 # Per-frame GIF stats with a FULL oracle: each frame of the planted
 # animation carries its OWN constant color v_f = 1 + (id*7 + 31*f) % 255,
 # so the decode must keep frames distinct and ordered — a wrong frame
 # order, a dropped frame, or cross-frame state leakage all break the
-# hash. One input row fans out to n_frames output rows (the
-# one-to-many decode shape the AVI sampler also uses).
+# hash. One input row fans out to n_frames output rows.
 _GIF_FRAME_STATS_ORACLE = """
     WITH base AS (
         SELECT doc_id,
@@ -514,40 +443,26 @@ def mm_gif_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     verifies frame ORDER and isolation, not just presence — the
     animation-analytics twin of mm_decode_gif_real's first-frame
     stats."""
-    import pandas as pd
-
+    from k8e_fetch_spark.operators.gif import encode_gif
     from k8e_fetch_spark.operators.multimodal import decode_media_gif_frames
 
-    docs = load(spark, sf_dir, "documents").select("doc_id")
+    def make_payload(i: int) -> bytes:
+        w, h = 4 + i % 21, 4 + i % 17
+        nf = 1 + i % 4
+        palette = [((v := 1 + (i * 7 + 31 * f) % 255), v, v) for f in range(nf)]
+        frames = [bytes([f]) * (w * h) for f in range(nf)]
+        return encode_gif(w, h, palette, frames, delays_cs=[4] * nf)
 
-    def encode_batches(batches):
-        from k8e_fetch_spark.operators.gif import encode_gif
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 4 + i % 21, 4 + i % 17
-                nf = 1 + i % 4
-                palette = [
-                    ((v := 1 + (i * 7 + 31 * f) % 255), v, v) for f in range(nf)
-                ]
-                frames = [bytes([f]) * (w * h) for f in range(nf)]
-                payloads.append(
-                    encode_gif(w, h, palette, frames, delays_cs=[4] * nf)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    with_payload = docs.mapInPandas(encode_batches, "doc_id long, payload binary")
-    return decode_media_gif_frames(with_payload)
+    docs = load(spark, sf_dir, "documents")
+    return decode_media_gif_frames(_synth_payloads(docs, make_payload))
 
 
-# Real resize with a FULL oracle: the constant-gray JPEG construction
-# of mm_decode_jpeg_real feeds the REAL resize stage (JPEG decode ->
-# box-average -> PNG re-encode -> re-decode of our own thumbnail).
-# Box-averaging a constant image yields the same constant, so the
-# re-decoded thumbnail's mean pixel is exactly v — and getting it
-# requires every hop (entropy decode, resample, DEFLATE re-encode,
+# Real resize with a FULL oracle: the constant-gray JPEGs of
+# mm_decode_jpeg_real (_gray_jpeg) feed the REAL resize stage (JPEG
+# decode -> box-average -> PNG re-encode -> re-decode of our own
+# thumbnail). Box-averaging a constant image yields the same constant,
+# so the re-decoded thumbnail's mean pixel is exactly v — and getting
+# it requires every hop (entropy decode, resample, DEFLATE re-encode,
 # PNG re-decode) to be right.
 _RESIZE_REAL_ORACLE = """
     SELECT doc_id,
@@ -565,43 +480,15 @@ _RESIZE_REAL_ORACLE = """
 )
 def mm_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL thumbnailing end to end: genuine baseline JPEGs (the
-    mm_decode_jpeg_real construction — 4:2:0, restart markers on every
-    third doc) decoded, box-averaged to 16x12, re-encoded as PNG and
-    re-decoded to prove the emitted thumbnail bytes are themselves a
-    valid image. Replaces the stub resample hop with the actual
-    codec chain; gradient-image resampling accuracy is pinned against
-    a numpy reference in tests/test_multimodal.py."""
-    import numpy as np
-    import pandas as pd
-
+    mm_decode_jpeg_real construction) decoded, box-averaged to 16x12,
+    re-encoded as PNG and re-decoded to prove the emitted thumbnail
+    bytes are themselves a valid image. Gradient-image resampling
+    accuracy is pinned against a numpy reference in
+    tests/test_multimodal.py."""
     from k8e_fetch_spark.operators.multimodal import resize_media_real
 
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-
-    def encode_batches(batches):
-        from k8e_fetch_spark.operators.jpeg import encode_jpeg
-
-        ones = np.ones((8, 8))
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 8 + i % 25, 8 + i % 19
-                v = 1 + (i * 7) % 255
-                img = np.full((h, w, 3), v, dtype=np.uint8)
-                payloads.append(
-                    encode_jpeg(
-                        img,
-                        quant_luma=ones,
-                        quant_chroma=ones,
-                        subsampling="4:2:0",
-                        restart_interval=i % 3,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    with_payload = docs.mapInPandas(encode_batches, "doc_id long, payload binary")
-    return resize_media_real(with_payload, target=(16, 12)).select(
+    docs = load(spark, sf_dir, "documents")
+    return resize_media_real(_synth_payloads(docs, _gray_jpeg), target=(16, 12)).select(
         "doc_id", "out_width", "out_height", "mean_px"
     )
 
@@ -644,28 +531,17 @@ def mm_decode_audio_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     stated relationally. Square-wave construction makes every statistic
     integral: peak == rms == amplitude, mean == 0 (even frame count),
     zero crossings == frames - 1."""
-    import pandas as pd
-
     from k8e_fetch_spark.operators.multimodal import decode_media_wav
+    from k8e_fetch_spark.operators.wav import encode_wav
 
-    docs = load(spark, sf_dir, "documents").select("doc_id")
+    def make_payload(i: int) -> bytes:
+        rate = 8000 + (i % 5) * 1000
+        frames = 2 * (50 + i % 25)
+        amp = 100 + (i * 37) % 30000
+        return encode_wav(rate, 1, [amp if j % 2 == 0 else -amp for j in range(frames)])
 
-    def encode_batches(batches):
-        from k8e_fetch_spark.operators.wav import encode_wav
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                rate = 8000 + (i % 5) * 1000
-                frames = 2 * (50 + i % 25)
-                amp = 100 + (i * 37) % 30000
-                samples = [amp if j % 2 == 0 else -amp for j in range(frames)]
-                payloads.append(encode_wav(rate, 1, samples))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    with_payload = docs.mapInPandas(encode_batches, "doc_id long, payload binary")
-    decoded = decode_media_wav(with_payload)
+    docs = load(spark, sf_dir, "documents")
+    decoded = decode_media_wav(_synth_payloads(docs, make_payload))
     # integer-exact serialization: features are
     # [duration_sec, peak/32768, rms/32768, mean/32768, zc_frac]
     return decoded.select(
@@ -762,42 +638,28 @@ def mm_decode_video_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks, parameters derived from doc_id), then ``decode_media_avi``
     walks the genuine container — chunk framing, header/frame-count
     consistency — and samples every 2nd frame from the REAL index.
-    Completes the container trilogy (PNG, WAV, AVI); the per-frame
-    pixel codec is the one deliberate stub (no ffmpeg ships here), and
-    frame sampling never decodes skipped frames in production either."""
-    import pandas as pd
-
+    The per-frame pixel payloads stay opaque (no video codec ships
+    here), and frame sampling never decodes skipped frames in
+    production either."""
+    from k8e_fetch_spark.operators.avi import encode_avi
     from k8e_fetch_spark.operators.multimodal import decode_media_avi
 
-    docs = load(spark, sf_dir, "documents").select("doc_id")
+    def make_payload(i: int) -> bytes:
+        w, h = 16 * (2 + i % 5), 16 * (1 + i % 4)
+        uspf = 20000 + (i % 5) * 5000
+        n = 4 + i % 6
+        frames = [bytes((k % 251,)) * (50 + (i * 13 + k * 7) % 100) for k in range(n)]
+        return encode_avi(w, h, uspf, frames)
 
-    def encode_batches(batches):
-        from k8e_fetch_spark.operators.avi import encode_avi
-
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                w, h = 16 * (2 + i % 5), 16 * (1 + i % 4)
-                uspf = 20000 + (i % 5) * 5000
-                n = 4 + i % 6
-                frames = [
-                    bytes((k % 251,)) * (50 + (i * 13 + k * 7) % 100)
-                    for k in range(n)
-                ]
-                payloads.append(encode_avi(w, h, uspf, frames))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    with_payload = docs.mapInPandas(encode_batches, "doc_id long, payload binary")
-    return decode_media_avi(with_payload).select(
+    docs = load(spark, sf_dir, "documents")
+    return decode_media_avi(_synth_payloads(docs, make_payload)).select(
         "doc_id",
         "width",
         "height",
         "n_frames",
         "duration_us",
         # JSON-serialized, not raw array<int>: the driver's canonicalizer
-        # hashes values via pandas factorize, which cannot hash lists —
-        # r7's only red driver row (TypeError: unhashable type: 'list').
+        # hashes values via pandas factorize, which cannot hash lists.
         # Same convention as mm_decode_meta above.
         F.to_json("sampled_frames").alias("sampled_frames"),
         "mean_frame_bytes",

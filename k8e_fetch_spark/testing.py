@@ -112,3 +112,11 @@ def scan_metric(df, name: str) -> int:
         if metrics.contains(name):
             total += metrics.apply(name).value()
     return int(total)
+
+
+def formatted_plan(df) -> str:
+    """The frame's ``EXPLAIN FORMATTED`` text (physical plan overview
+    plus per-node details: PushedFilters, ReadSchema, exchanges)."""
+    jvm = df.sparkSession._jvm
+    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    return df._jdf.queryExecution().explainString(mode)

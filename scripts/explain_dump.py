@@ -17,6 +17,7 @@ if REPO_ROOT not in sys.path:
 
 from k8e_fetch_spark.queries import REGISTRY, queries  # noqa: E402
 from k8e_fetch_spark.session import get_spark  # noqa: E402
+from k8e_fetch_spark.testing import formatted_plan  # noqa: E402
 
 SHOWCASE = [
     ("tpch_q1_pricing_summary", "filtered scan -> two-phase aggregate; filter + pruning pushed to parquet"),
@@ -86,14 +87,9 @@ def main() -> None:
     print("`PushedFilters`/`ReadSchema` on scans, `BroadcastHashJoin` (never")
     print("SortMergeJoin for dimensions), paired `HashAggregate`s (partial +")
     print("final), `TakeOrderedAndProject` for top-k, and exchange counts.")
-    def formatted(df) -> str:
-        return df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        ).strip()
-
     for name, why in SHOWCASE:
         df = qs[name](spark, sf_dir)
-        print(f"\n## {name}\n\n*{why}*\n\n```\n{formatted(df)}\n```")
+        print(f"\n## {name}\n\n*{why}*\n\n```\n{formatted_plan(df).strip()}\n```")
 
     # --- r11 maintenance/streaming additions (VERDICT r11 #5): their
     # load-bearing plans are not the registry call's RETURNED frame
@@ -130,7 +126,7 @@ def main() -> None:
             " profile; `rebalance=True` swaps the Coalesce for one round-robin"
             " Exchange when input file sizes are heavily skewed.*\n"
         )
-        print(f"```\n{formatted(compact)}\n```")
+        print(f"```\n{formatted_plan(compact).strip()}\n```")
 
         from k8e_fetch_spark.operators.dedup import insert_ignore
         from k8e_fetch_spark.plans import snapshots as snap
@@ -168,7 +164,7 @@ def main() -> None:
             " sinks ONLY its output — the delta — instead of the union:"
             " write volume O(delta), not O(table).*\n"
         )
-        print(f"```\n{formatted(merged)}\n```")
+        print(f"```\n{formatted_plan(merged).strip()}\n```")
 
         from pyspark.sql import functions as F
 
@@ -197,7 +193,7 @@ def main() -> None:
             " scans 34% of rows; 2-D rectangles beat plain per-dim pushdown"
             " by a further ~40% (SCALE.md).*\n"
         )
-        print(f"```\n{formatted(pruned)}\n```")
+        print(f"```\n{formatted_plan(pruned).strip()}\n```")
 
         from k8e_fetch_spark.operators.scd import scd2_as_of, scd2_apply
 
@@ -240,7 +236,7 @@ def main() -> None:
             " deployment-shape plan over the parquet-resident history that"
             " same chain would persist.*\n"
         )
-        print(f"```\n{formatted(asof)}\n```")
+        print(f"```\n{formatted_plan(asof).strip()}\n```")
     finally:
         shutil.rmtree(work, ignore_errors=True)
 

@@ -29,6 +29,7 @@ if REPO_ROOT not in sys.path:
 
 from k8e_fetch_spark.queries import REGISTRY, queries  # noqa: E402
 from k8e_fetch_spark.session import get_spark  # noqa: E402
+from k8e_fetch_spark.testing import formatted_plan  # noqa: E402
 
 FACTS = ["lineitem", "orders", "events", "documents", "embeddings"]
 
@@ -40,9 +41,7 @@ def main() -> None:
     for name, q in REGISTRY.items():
         try:
             df = q.fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-            )
+            plan = formatted_plan(df)
             multi = {
                 t: c
                 for t in FACTS

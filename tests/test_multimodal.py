@@ -116,6 +116,8 @@ def test_png_decode_stage_binary_file_source(spark, tmp_path):
                px.count(0) / len(px), 1.0],
         )
     (tmp_path / "img_999.png").write_bytes(b"\x89PNG\r\n\x1a\nnot really")
+    zero_wide = encode_png(0, 5, b"", 2)  # PNG forbids zero dimensions
+    (tmp_path / "img_998.png").write_bytes(zero_wide)
 
     files = (
         spark.read.format("binaryFile")
@@ -128,8 +130,10 @@ def test_png_decode_stage_binary_file_source(spark, tmp_path):
         )
     )
     got = {r["doc_id"]: r for r in decode_media_png(files).collect()}
-    assert len(got) == 13
+    assert len(got) == 14
     assert got[999]["width"] is None and got[999]["features"] == []
+    assert got[998]["width"] is None and got[998]["features"] == []
+    assert got[998]["byte_len"] == len(zero_wide)
     for i, (w, h, feats) in expected.items():
         g = got[i]
         assert (g["width"], g["height"], g["n_frames"]) == (w, h, 1)
@@ -501,21 +505,27 @@ def test_jpeg_quarantine_contract(spark):
     progressive[i + 1] = 0xC2
     with _pytest.raises(ValueError):
         decode_jpeg(bytes(progressive))
+    zero_area = bytearray(good)
+    zero_area[i + 5 : i + 9] = b"\x00\x00\x00\x0c"  # SOF0 height 0
+    with _pytest.raises(ValueError):
+        decode_jpeg(bytes(zero_area))
     with _pytest.raises(ValueError):
         decode_jpeg(good[: len(good) // 2])
 
     df = spark.createDataFrame(
         pd.DataFrame(
             {
-                "doc_id": [1, 2, 3],
-                "payload": [good, bytes(progressive), good[: len(good) // 2]],
+                "doc_id": [1, 2, 3, 4],
+                "payload": [
+                    good, bytes(progressive), good[: len(good) // 2], bytes(zero_area),
+                ],
             }
         )
     )
     got = {r["doc_id"]: r for r in decode_media_jpeg(df).collect()}
     assert (got[1]["width"], got[1]["height"]) == (12, 10)
     assert abs(got[1]["features"][0] - 99 / 255.0) < 1e-3
-    for bad_id in (2, 3):
+    for bad_id in (2, 3, 4):
         assert got[bad_id]["width"] is None and got[bad_id]["features"] == []
 
 
@@ -707,26 +717,36 @@ def struct_pack_len(body: bytes) -> bytes:
 def test_gif_stage_quarantines_and_counts_frames(spark):
     """decode_media_gif: n_frames is the real frame count, first-frame
     stats come from decoded pixels, and malformed GIFs (truncated LZW,
-    garbage) quarantine without failing the batch."""
+    garbage, a zero-area logical screen) quarantine without failing the
+    batch — in the first-frame stage and in the per-frame stage."""
     import pandas as pd
 
     from k8e_fetch_spark.operators.gif import encode_gif
-    from k8e_fetch_spark.operators.multimodal import decode_media_gif
+    from k8e_fetch_spark.operators.multimodal import decode_media_gif, decode_media_gif_frames
 
     good = encode_gif(10, 8, [(120, 120, 120)], [b"\x00" * 80] * 3, delays_cs=[5] * 3)
+    zero_area = [encode_gif(w, h, [(9, 9, 9)], [b""]) for w, h in ((0, 0), (0, 5), (5, 0))]
     df = spark.createDataFrame(
         pd.DataFrame(
             {
-                "doc_id": [1, 2, 3],
-                "payload": [good, good[: len(good) - 10], b"GIF89a junk"],
+                "doc_id": [1, 2, 3, 4, 5, 6],
+                "payload": [good, good[: len(good) - 10], b"GIF89a junk", *zero_area],
             }
         )
     )
+    bad_ids = (2, 3, 4, 5, 6)
     got = {r["doc_id"]: r for r in decode_media_gif(df).collect()}
     assert (got[1]["width"], got[1]["height"], got[1]["n_frames"]) == (10, 8, 3)
     assert abs(got[1]["features"][0] - 120 / 255.0) < 1e-3
-    for bad in (2, 3):
+    for bad in bad_ids:
         assert got[bad]["width"] is None and got[bad]["features"] == []
+
+    frames = decode_media_gif_frames(df).collect()
+    assert sorted(r["frame_idx"] for r in frames if r["doc_id"] == 1) == [0, 1, 2]
+    assert {r["mean_px"] for r in frames if r["doc_id"] == 1} == {120}
+    for bad in bad_ids:
+        (row,) = [r for r in frames if r["doc_id"] == bad]
+        assert row["frame_idx"] is None and row["mean_px"] is None
 
 
 def test_wav_bit_depths_and_float():
@@ -914,3 +934,42 @@ def test_png_variant_encoders_roundtrip():
 
     s16 = rng.randint(0, 65536, 5 * 4 * 3).tolist()
     assert decode_png(encode_png_16bit(5, 4, s16))[3] == bytes(v >> 8 for v in s16)
+
+
+# ------------------------------------------------------ quarantine contract
+
+
+@pytest.mark.parametrize(
+    "stage, truncated_magic",
+    [
+        ("decode_media_png", b"\x89PNG\r\n"),
+        ("decode_media_jpeg", b"\xff\xd8\xff"),
+        ("decode_media_gif", b"GIF89"),
+        ("decode_media_gif_frames", b"GIF89"),
+        ("decode_media_wav", b"RIFF\x24\x00\x00\x00WAV"),
+        ("decode_media_avi", b"RIFF\x24\x00\x00\x00AVI"),
+        ("resize_media_real", b"\x89PNG\r\n"),
+    ],
+)
+def test_media_stage_quarantine_row_shape(spark, stage, truncated_magic):
+    """Every real decode stage turns an undecodable payload into exactly
+    one row shaped by its schema: byte_len (where present) is the
+    payload length, array columns are [] and every other column is
+    NULL."""
+    from pyspark.sql.types import ArrayType
+
+    from k8e_fetch_spark.operators import multimodal
+
+    payloads = {1: b"", 2: truncated_magic}
+    df = spark.createDataFrame(list(payloads.items()), "doc_id long, payload binary")
+    out = getattr(multimodal, stage)(df)
+    rows = out.collect()
+    assert sorted(r["doc_id"] for r in rows) == [1, 2]
+    for r in rows:
+        for f in out.schema.fields[1:]:
+            if f.name == "byte_len":
+                assert r[f.name] == len(payloads[r["doc_id"]])
+            elif isinstance(f.dataType, ArrayType):
+                assert r[f.name] == [], (stage, f.name)
+            else:
+                assert r[f.name] is None, (stage, f.name)

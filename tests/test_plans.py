@@ -11,6 +11,7 @@ import re
 import pytest
 
 from k8e_fetch_spark.queries import REGISTRY, queries
+from k8e_fetch_spark.testing import formatted_plan
 from tests.conftest import SF_DIR
 
 queries()
@@ -24,10 +25,7 @@ def _executed_plan(spark, name: str) -> str:
 
 
 def _formatted(spark, name: str) -> str:
-    df = REGISTRY[name].fn(spark, SF_DIR)
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    return formatted_plan(REGISTRY[name].fn(spark, SF_DIR))
 
 
 def test_q1_filter_pushed_to_scan(spark):

@@ -327,6 +327,61 @@ def test_property_png_roundtrip_exact(w, h, color_type, seed):
     assert out == raw
 
 
+def _py_pixel_stats(px: list[list[int]]) -> list[float]:
+    """Pure-Python model of the image features: Python-int sums, each
+    feature one correctly rounded int / int quotient (then /255.0)."""
+    n_px, ch = len(px), len(px[0])
+    color = [row[:3] if ch >= 3 else row[:1] for row in px]
+    flat = [v for row in color for v in row]
+    means = [sum(row[c] for row in color) / n_px / 255.0 for c in range(len(color[0]))]
+    if len(means) == 1:  # gray: r = g = b
+        means = means * 3
+    alpha = sum(row[-1] for row in px) / n_px / 255.0 if ch in (2, 4) else 1.0
+    return [
+        *means,
+        sum(flat) / len(flat) / 255.0,
+        min(flat) / 255.0,
+        max(flat) / 255.0,
+        flat.count(0) / len(flat),
+        alpha,
+    ]
+
+
+@settings(max_examples=60, deadline=None)
+@example(n_px=1, ch=1, hi=0, seed=0)
+@given(
+    n_px=st.integers(1, 400),
+    ch=st.sampled_from([1, 2, 3, 4]),  # gray, gray+alpha, RGB, RGBA
+    hi=st.sampled_from([0, 1, 2, 255]),
+    seed=st.integers(0, 2**31 - 1),
+)
+def test_pixel_stats_match_python_model(n_px, ch, hi, seed):
+    """_pixel_stats (every image stage's features) equals the
+    pure-Python model bit for bit; for 1- and 3-channel pixels it also
+    equals the float64 numpy form (gray replicated to RGB) — the two
+    are correctly rounded quotients of the same exact integers."""
+    import numpy as np
+
+    from k8e_fetch_spark.operators.multimodal import _pixel_stats
+
+    a = np.random.RandomState(seed).randint(0, hi + 1, (n_px, ch)).astype(np.uint8)
+    got = _pixel_stats(a)
+    assert got == _py_pixel_stats(a.tolist())
+    if ch in (1, 3):
+        flat = (a if ch == 3 else np.repeat(a, 3, axis=1)).astype(np.float64)
+        means = flat.mean(axis=0) / 255.0
+        assert got == [
+            float(means[0]),
+            float(means[1]),
+            float(means[2]),
+            float(flat.mean() / 255.0),
+            float(flat.min() / 255.0),
+            float(flat.max() / 255.0),
+            float((flat == 0).mean()),
+            1.0,
+        ]
+
+
 def test_codec_truncation_fuzz_quarantines_as_valueerror():
     """EVERY prefix of a valid payload, through every codec, must
     either decode (container formats can be self-delimiting — a RIFF

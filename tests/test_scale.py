@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from k8e_fetch_spark.operators.scale import salted_agg, salted_join, skew_metrics, write_bucketed
+from k8e_fetch_spark.testing import formatted_plan
 from tests.conftest import SF_DIR
 
 
@@ -168,9 +169,7 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     table = spark.read.parquet(path)
     n_types = events.select("event_type").distinct().count()
     one = table.filter(F.col("event_type") == "click")
-    plan = one._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    plan = formatted_plan(one)
     assert "PartitionFilters" in plan and "event_type" in plan, plan
     # file-level proof: only the one partition directory is actually
     # scanned (input_file_name reflects post-pruning execution;
