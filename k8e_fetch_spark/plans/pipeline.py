@@ -351,7 +351,10 @@ class Pipeline:
 
         Written to a temp dir then swapped, so a component can be merged
         with its own previous contents (read-modify-write would otherwise
-        race with Spark's lazy reads). Cluster form: Delta MERGE.
+        race with Spark's lazy reads). The re-read declares the schema
+        just written — a file source makes every field nullable, which is
+        what footer inference would give — so it starts no job.
+        Cluster form: Delta MERGE.
         """
         path = self._component_path(name)
         tmp = path + ".__tmp__"
@@ -359,7 +362,7 @@ class Pipeline:
         if os.path.exists(path):
             shutil.rmtree(path)
         os.replace(tmp, path)
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(df.schema).parquet(path)
 
 
 def write_jdbc(

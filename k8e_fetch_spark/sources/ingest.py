@@ -22,18 +22,25 @@ Re-expresses the reference's import pipe — ``unzip -p f | iconv -f ENC
 - **op-skip-unknown**: dispatch table keyed on filename pattern; files
   matching no rule are synced-but-never-loaded (fetcher.bash:115-118).
 
-Scale notes: one zip member = one input task (zip DEFLATE streams are
-not splittable); downstream width is restored by ``repartition`` after
-decode — call :func:`rebalance_after_decode` when the member is large.
+Scale notes: one zip member = one decode task (DEFLATE streams are not
+splittable). The rows it decodes to are spread over ``min(defaultParallelism,
+ceil(member bytes / spark.sql.files.maxPartitionBytes))`` partitions before
+repair and parse — Spark's own split size applied to the uncompressed
+member — and a member that fits one split adds no exchange. The column
+list (line 0) and the member size are read on the driver from the local
+file through the same member opener and line splitter the decode stage
+runs, so planning a load starts no Spark job.
 """
 
 from __future__ import annotations
 
+import contextlib
 import io
 import re
 import zipfile
 from collections.abc import Iterator
 from dataclasses import dataclass, field
+from typing import BinaryIO
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -103,44 +110,62 @@ def table_name_for(path: str) -> str:
 _DECODE_CHUNK_CHARS = 1 << 20  # 1M chars per decoded chunk
 
 
-def _decode_member(name: str, raw: bytes, encoding: str) -> Iterator[tuple[str, int, str]]:
-    """Stream (path, line_no, line) from one file's bytes, decoding zips
-    member-by-member and text incrementally (never whole-file-as-str).
+def _lines(stream: BinaryIO, encoding: str) -> Iterator[str]:
+    r"""Decode a binary stream incrementally (never whole-file-as-str) into
+    lines split on \n exactly — like the reference's sed|sqlite pipe and
+    unlike ``str.splitlines``, which also splits on NEL/VT/FF. A trailing
+    \r is stripped per line (\r\n input); undecodable bytes become
+    U+FFFD. Chunked decode + ``str.split`` rather than per-line
+    TextIOWrapper iteration: one zip member is one task, so this loop is
+    the ingest critical path."""
+    text = io.TextIOWrapper(stream, encoding=encoding, errors="replace", newline="")
+    carry = ""
+    while True:
+        chunk = text.read(_DECODE_CHUNK_CHARS)
+        if not chunk:
+            break
+        parts = (carry + chunk).split("\n")
+        carry = parts.pop()  # text after the last \n (maybe partial)
+        for ln in parts:
+            yield ln.rstrip("\r")
+    if carry:
+        yield carry.rstrip("\r")
 
-    Chunked decode + ``str.splitlines`` instead of per-line TextIOWrapper
-    iteration: the Python-level line loop was the decode bottleneck for
-    large members (one zip member = one task, so this serial loop IS the
-    ingest critical path)."""
 
-    def _lines(stream: io.BufferedIOBase) -> Iterator[str]:
-        # split on \n exactly (like the reference's sed|sqlite pipe and
-        # unlike str.splitlines, which also splits on NEL/VT/FF);
-        # trailing \r is stripped per line, covering \r\n input
-        text = io.TextIOWrapper(stream, encoding=encoding, errors="replace", newline="")
-        carry = ""
-        while True:
-            chunk = text.read(_DECODE_CHUNK_CHARS)
-            if not chunk:
-                break
-            parts = (carry + chunk).split("\n")
-            carry = parts.pop()  # text after the last \n (maybe partial)
-            for ln in parts:
-                yield ln.rstrip("\r")
-        if carry:
-            yield carry.rstrip("\r")
+@contextlib.contextmanager
+def _member(name: str, stream: BinaryIO) -> Iterator[tuple[BinaryIO, int]]:
+    """The payload of one source file and its uncompressed byte size: the
+    first file member of a zip (reference zips carry a single member,
+    ``unzip -p``; a zip with none has an empty payload), or the file."""
+    if not name.lower().endswith(".zip"):
+        size = stream.seek(0, io.SEEK_END)
+        stream.seek(0)
+        yield stream, size
+        return
+    with zipfile.ZipFile(stream) as zf:
+        info = next((m for m in zf.infolist() if not m.is_dir()), None)
+        if info is None:
+            yield io.BytesIO(), 0
+            return
+        with zf.open(info) as mf:
+            yield mf, info.file_size
 
-    if name.lower().endswith(".zip"):
-        with zipfile.ZipFile(io.BytesIO(raw)) as zf:
-            for member in zf.infolist():
-                if member.is_dir():
-                    continue
-                with zf.open(member) as mf:
-                    for i, ln in enumerate(_lines(mf)):
-                        yield name, i, ln
-                break  # reference zips carry a single member (unzip -p)
-    else:
-        for i, ln in enumerate(_lines(io.BytesIO(raw))):
+
+def _decode_member(name: str, stream: BinaryIO, encoding: str) -> Iterator[tuple[str, int, str]]:
+    """Stream (path, line_no, line) from one source file opened as a
+    binary stream, decoding its member incrementally."""
+    with _member(name, stream) as (payload, _):
+        for i, ln in enumerate(_lines(payload, encoding)):
             yield name, i, ln
+
+
+def _head(path: str, encoding: str) -> tuple[str | None, int]:
+    r"""Line 0 (None when the file has no lines) and member size of a local
+    source file, read on the driver with the decode stage's own member
+    opener and line splitter — so BOMs, \r and undecodable bytes give the
+    same header here as in the decoded rows."""
+    with open(path, "rb") as f, _member(path, f) as (payload, size):
+        return next(_lines(payload, encoding), None), size
 
 
 def raw_lines(spark: SparkSession, paths: list[str], encoding: str) -> DataFrame:
@@ -155,7 +180,7 @@ def raw_lines(spark: SparkSession, paths: list[str], encoding: str) -> DataFrame
         for pdf in batches:
             for path, raw in zip(pdf["path"], pdf["content"]):
                 buf: list[tuple[str, int, str]] = []
-                for rec in _decode_member(path, bytes(raw), encoding):
+                for rec in _decode_member(path, io.BytesIO(raw), encoding):
                     buf.append(rec)
                     if len(buf) >= _BATCH_LINES:
                         yield pd.DataFrame(buf, columns=["path", "line_no", "line"])
@@ -182,6 +207,7 @@ def _csv_options(sep: str, quoted: bool) -> dict[str, str]:
 
 def parse_lines(
     lines: DataFrame,
+    header: str,
     sep: str,
     repair: bool = False,
     quoted: bool = False,
@@ -189,18 +215,15 @@ def parse_lines(
 ) -> DataFrame:
     """Raw (path, line_no, line) → all-string table.
 
-    Header = line 0 (tiny, collected once, normalized per op-header-norm;
-    probed on the PRE-shuffle plan so ``first()`` short-circuits after
-    one decoded batch); data rows optionally quote-repaired
+    ``header`` is the sources' line 0: split on ``sep`` and normalized
+    (op-header-norm), it is the column list, and line 0 of every file is
+    left out of the data. Data rows are optionally quote-repaired
     (op-quote-repair), then parsed by ``from_csv`` with an all-StringType
-    schema — JVM parse. ``rebalance_to`` inserts the width-restoring
-    exchange BETWEEN decode and parse, so repair+parse of an
-    unsplittable zip member runs at full parallelism.
+    schema — JVM parse. ``rebalance_to`` inserts a round-robin exchange
+    BETWEEN decode and parse, so repair + parse of an unsplittable zip
+    member run at that width.
     """
-    header_row = lines.filter(F.col("line_no") == 0).select("line").first()
-    if header_row is None:
-        raise ValueError("no header row found")
-    columns = [normalize_header_name(c) for c in header_row["line"].split(sep)]
+    columns = [normalize_header_name(c) for c in header.split(sep)]
     ddl = ", ".join(f"`{c}` STRING" for c in columns)
 
     data = lines.filter(F.col("line_no") > 0)
@@ -231,28 +254,52 @@ def read_plain_delimited(
     return df.toDF(*[normalize_header_name(c) for c in df.columns])
 
 
+_BYTE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
+
+
+def _conf_bytes(value: str) -> int:
+    """A Spark byte-size setting ("134217728b", "64m", "1kb", "4096") in
+    bytes; a bare number is bytes. Spark validates the value when it is
+    set."""
+    m = re.fullmatch(r"(\d+)([kmgtp]?)b?", value.strip().lower())
+    return int(m[1]) * _BYTE_UNITS[m[2]]
+
+
+def _decode_width(spark: SparkSession, member_bytes: int) -> int:
+    """Partitions for the rows decoded from zip members of ``member_bytes``
+    uncompressed bytes: Spark's file split size applied to those bytes,
+    capped at the default parallelism."""
+    try:
+        cores = spark.sparkContext.defaultParallelism
+    except Exception:  # Spark Connect: no SparkContext handle
+        cores = 32
+    split = _conf_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    return min(cores, -(-member_bytes // split))
+
+
 def read_source(spark: SparkSession, paths: list[str], spec: ReaderSpec) -> DataFrame:
     """Full decode for one source family per its ReaderSpec, ending in an
     all-string DataFrame with normalized headers (+ op-add-column for
-    evolving schemas, cf. fetcher.bash:103)."""
+    evolving schemas, cf. fetcher.bash:103). ``paths`` are local files of
+    one family; the column list is line 0 of ``paths[0]``."""
     needs_python = spec.zipped or spec.encoding.lower().replace("_", "-") in (
         "utf-16",
         "utf-16le",
         "utf-16be",
     )
     if needs_python or spec.repair:
-        lines = raw_lines(spark, paths, spec.encoding)
-        width = None
-        if spec.zipped:
-            # one zip member = one decode task (DEFLATE is unsplittable);
-            # restore plan width between decode and parse so the repair +
-            # CSV parse run at full parallelism
-            try:
-                width = spark.sparkContext.defaultParallelism
-            except Exception:  # Spark Connect: no SparkContext handle
-                width = 32
+        heads = [_head(p, spec.encoding) for p in paths]
+        header = heads[0][0]
+        if header is None:
+            raise ValueError("no header row found")
+        width = _decode_width(spark, sum(n for _, n in heads)) if spec.zipped else 1
         df = parse_lines(
-            lines, spec.sep, repair=spec.repair, quoted=spec.quoted, rebalance_to=width
+            raw_lines(spark, paths, spec.encoding),
+            header,
+            spec.sep,
+            repair=spec.repair,
+            quoted=spec.quoted,
+            rebalance_to=width if width > 1 else None,
         )
     else:
         df = read_plain_delimited(spark, paths, spec.sep, spec.encoding, quoted=spec.quoted)
@@ -260,10 +307,3 @@ def read_source(spark: SparkSession, paths: list[str], spec: ReaderSpec) -> Data
         if c not in df.columns:
             df = df.withColumn(c, F.lit(None).cast("string"))
     return df
-
-
-def rebalance_after_decode(df: DataFrame, partitions: int) -> DataFrame:
-    """Zip members are unsplittable (one member = one decode task);
-    restore plan width for downstream shuffles/aggregations. At cluster
-    scale: partitions ≈ decoded_bytes / 128MB."""
-    return df.repartition(partitions)

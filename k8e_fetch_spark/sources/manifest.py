@@ -1,11 +1,12 @@
 """Object-version catalog: the reference's fetch stage as DataFrames.
 
 op-catalog-scan: ``aws s3api list-object-versions --bucket B > B.json``
-(/root/reference/bin/fetcher.bash:25-35) produces ``{"Versions":
-[{Key, VersionId, IsLatest, LastModified, Size, ETag}, ...]}``; here
-``spark.read.json`` + ``explode`` turns it into the manifest DataFrame
-every downstream predicate runs against. At scale the manifest for a
-100 TB bucket is itself big — it stays distributed; nothing collects.
+(fetcher.bash:25-35) produces ``{"Versions": [{Key, VersionId, IsLatest,
+LastModified, Size, ETag}, ...]}``. That shape is fixed by the API, so
+the listing is read with a declared schema: building the manifest frame
+starts no Spark job, and a listing that does not parse fails the first
+action instead of reading as empty. The manifest for a 100 TB bucket is
+itself big — it stays distributed; nothing collects.
 
 Selection = op-regex-include + op-dir-exclude + op-uniq + implicit
 op-version-latest (fetcher.bash:54-57), and op-temporal-prune's
@@ -16,32 +17,56 @@ construction (SURVEY.md §4).
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+# ListObjectVersions ``Versions[]`` field -> manifest column, in
+# MANIFEST_SCHEMA order
+_AWS_FIELDS = (
+    ("Key", "key"),
+    ("VersionId", "version_id"),
+    ("IsLatest", "is_latest"),
+    ("LastModified", "last_modified"),
+    ("Size", "size"),
+    ("ETag", "etag"),
+)
 
 
 def read_manifest(spark: SparkSession, path: str) -> DataFrame:
-    """op-catalog-scan: version-manifest JSON → one row per object version.
-
-    Casts to the shared :data:`~k8e_fetch_spark.sources.objectstore.MANIFEST_SCHEMA`
+    """op-catalog-scan: version-manifest JSON → one row per object version,
+    in the shared :data:`~k8e_fetch_spark.sources.objectstore.MANIFEST_SCHEMA`
     so the recorded-JSON path and the live listing adapter are
-    interchangeable upstream of every catalog predicate."""
+    interchangeable upstream of every catalog predicate.
+
+    The file is read with the listing's declared schema and ``FAILFAST``:
+    a listing with no ``Versions`` (an empty bucket, or one holding only
+    ``DeleteMarkers``) or an empty one yields no rows, and a truncated or
+    mistyped file raises on the first action. A zero-byte local file —
+    a listing cut off before its first byte, which JSON would read as
+    no records — raises ``ValueError`` here."""
     from k8e_fetch_spark.sources.objectstore import MANIFEST_SCHEMA
 
-    raw = spark.read.option("multiLine", True).json(path)
-    exploded = raw.select(F.explode("Versions").alias("v")).select(
-        F.col("v.Key").alias("key"),
-        F.col("v.VersionId").alias("version_id"),
-        F.col("v.IsLatest").alias("is_latest"),
-        F.col("v.LastModified").alias("last_modified"),
-        F.col("v.Size").alias("size"),
-        F.col("v.ETag").alias("etag"),
+    if os.path.isfile(path) and os.path.getsize(path) == 0:
+        raise ValueError(f"empty manifest file: {path}")
+
+    version = T.StructType(
+        [T.StructField(aws, MANIFEST_SCHEMA[col].dataType) for aws, col in _AWS_FIELDS]
     )
-    return exploded.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in MANIFEST_SCHEMA.fields]
+    listing = T.StructType([T.StructField("Versions", T.ArrayType(version))])
+    raw = (
+        spark.read.schema(listing)
+        .option("multiLine", True)
+        .option("mode", "FAILFAST")
+        .json(path)
+    )
+    return raw.select(F.explode("Versions").alias("v")).select(
+        *[F.col(f"v.{aws}").alias(col) for aws, col in _AWS_FIELDS]
     )
 
 

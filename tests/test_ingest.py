@@ -181,3 +181,85 @@ def test_transcode_matches_iconv(spark, tmp_path):
                 "\t".join("" if v is None else v for v in row) for row in map(tuple, df.collect())
             ]
         assert sorted(got_lines) == sorted(want_data), name
+
+
+# --- driver-side header + decode width -----------------------------------
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "VR_Snapshot_20240514.zip",  # UTF-16 with BOM, zipped
+        "VR_Snapshot_20240514.tsv",  # UTF-16 with BOM
+        "ncvoter_Statewide.zip",  # LATIN1, zipped
+        "Candidate_Listing_2022.csv",  # quoted CSV, op-add-column
+    ],
+)
+def test_header_is_decoded_line_zero(spark, name):
+    """The column list read on the driver is line 0 of the decoded rows
+    (the Spark-side probe, written out here), normalized."""
+    from pyspark.sql import functions as F
+
+    from k8e_fetch_spark.operators.repair import normalize_header_name
+
+    spec = ingest.dispatch(name)
+    path = str(FIXTURES / name)
+    probe = ingest.raw_lines(spark, [path], spec.encoding).filter(F.col("line_no") == 0)
+    line0 = probe.select("line").first()["line"]
+    want = [normalize_header_name(c) for c in line0.split(spec.sep)]
+    want += [c for c in spec.add_columns if c not in want]
+    assert ingest.read_source(spark, [path], spec).columns == want
+
+
+def test_source_without_lines_has_no_header(spark, tmp_path):
+    """An empty zip member, a zip with no file member, an empty file and
+    a UTF-16 file holding only its BOM have no line 0 to name columns."""
+    import zipfile
+
+    empty_member = tmp_path / "ncvoter_empty.zip"
+    with zipfile.ZipFile(empty_member, "w") as zf:
+        zf.writestr("ncvoter_empty.tsv", b"")
+    dir_only = tmp_path / "ncvoter_dironly.zip"
+    with zipfile.ZipFile(dir_only, "w") as zf:
+        zf.writestr("sub/", b"")
+    empty_file = tmp_path / "vr_snapshot_empty.tsv"
+    empty_file.write_bytes(b"")
+    bom_only = tmp_path / "vr_snapshot_bom.tsv"
+    bom_only.write_bytes("".encode("utf-16"))
+    for path in (empty_member, dir_only, empty_file, bom_only):
+        spec = ingest.dispatch(path.name)
+        with pytest.raises(ValueError, match="no header row found"):
+            ingest.read_source(spark, [str(path)], spec)
+
+
+def test_decode_width_follows_split_size(spark):
+    """A zip member that fits one file split keeps its decode task's
+    partition; a larger one is spread round-robin over
+    min(defaultParallelism, ceil(member bytes / split)) partitions
+    before repair and parse. Same rows either way."""
+    import zipfile
+
+    from k8e_fetch_spark.testing import formatted_plan
+
+    name = "ncvoter_Statewide.zip"
+    path = str(FIXTURES / name)
+    spec = ingest.dispatch(name)
+    with zipfile.ZipFile(path) as zf:
+        member_bytes = zf.infolist()[0].file_size
+    narrow = ingest.read_source(spark, [path], spec)
+    assert "Exchange" not in formatted_plan(narrow)
+
+    key, split = "spark.sql.files.maxPartitionBytes", 128
+    prev = spark.conf.get(key)
+    spark.conf.set(key, f"{split}b")
+    try:
+        wide = ingest.read_source(spark, [path], spec)
+        plan = formatted_plan(wide)
+        wide_rows = sorted(map(tuple, wide.collect()))
+    finally:
+        spark.conf.set(key, prev)
+    n = min(spark.sparkContext.defaultParallelism, -(-member_bytes // split))
+    assert n > 1
+    assert plan.count("RoundRobinPartitioning(") == 1, plan
+    assert f"RoundRobinPartitioning({n})" in plan, plan
+    assert wide_rows == sorted(map(tuple, narrow.collect()))

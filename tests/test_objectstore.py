@@ -12,6 +12,8 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
+import pytest
+
 from k8e_fetch_spark.sources.manifest import read_manifest, select_keys
 from k8e_fetch_spark.sources.objectstore import (
     MANIFEST_SCHEMA,
@@ -67,18 +69,50 @@ def test_pagination_walks_all_pages():
         assert "KeyMarker" in call and "VersionIdMarker" in call
 
 
-def test_live_listing_matches_recorded_manifest(spark):
+def test_live_listing_matches_recorded_manifest(spark, tmp_path):
     """One schema, same rows: the adapter and read_manifest are
-    interchangeable sources for the catalog predicates."""
-    client = RecordedS3Client(_fixture_versions(), page_size=64)
-    live = list_versions(spark, client, "nc-bucket")
-    recorded = read_manifest(spark, str(FIXTURE))
+    interchangeable sources for the catalog predicates — also for
+    listings with no versions, which read as an empty manifest."""
+    empty_listings = [
+        {"Versions": []},
+        {},  # an empty bucket: the listing carries no Versions key
+        {"DeleteMarkers": [{"Key": "a.zip", "VersionId": "d1", "IsLatest": True}]},
+    ]
+    paths = [FIXTURE]
+    for i, listing in enumerate(empty_listings):
+        paths.append(tmp_path / f"listing{i}.json")
+        paths[-1].write_text(json.dumps(listing))
+    for path in paths:
+        versions = json.loads(path.read_text()).get("Versions", [])
+        client = RecordedS3Client(versions, page_size=64)
+        live = list_versions(spark, client, "nc-bucket")
+        recorded = read_manifest(spark, str(path))
 
-    assert live.schema == MANIFEST_SCHEMA
-    assert recorded.schema == MANIFEST_SCHEMA
+        assert live.schema == MANIFEST_SCHEMA
+        assert recorded.schema == MANIFEST_SCHEMA
 
-    key = lambda r: (r["key"], r["version_id"])  # noqa: E731
-    assert sorted(live.collect(), key=key) == sorted(recorded.collect(), key=key)
+        key = lambda r: (r["key"], r["version_id"])  # noqa: E731
+        got = sorted(recorded.collect(), key=key)
+        assert sorted(live.collect(), key=key) == got, path.name
+        assert len(got) == len(versions), path.name
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        '{"Versions": [{"Key": "data/ncvoter_Statewide.zip", "VersionId": "v9", "Size": 40',
+        '{"Versions": [{"Key": "a.zip", "Size": "forty"}]}',
+        "",
+    ],
+    ids=["truncated", "mistyped", "zero_bytes"],
+)
+def test_broken_manifest_fails_loudly(spark, tmp_path, text):
+    """A listing that does not parse raises — by the first action at the
+    latest — and never reads as an empty listing."""
+    path = tmp_path / "listing.json"
+    path.write_text(text)
+    with pytest.raises(Exception):
+        read_manifest(spark, str(path)).collect()
 
 
 def test_downstream_selection_source_agnostic(spark):

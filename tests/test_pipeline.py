@@ -150,6 +150,63 @@ def test_stage_memoization_skip_load(spark, tmp_path):
     assert counts_again == counts_first
 
 
+@pytest.mark.parametrize("listing", ['{"Versions": []}', "{}"], ids=["empty", "no_versions"])
+def test_empty_listing_loads_nothing(spark, tmp_path, listing):
+    """An empty bucket's listing is a run with nothing to do: no tables,
+    no components, nothing written to the warehouse."""
+    manifest = tmp_path / "manifest.json"
+    manifest.write_text(listing)
+    wh = tmp_path / "wh"
+    assert Pipeline(spark, DEFAULT_SPEC, str(wh)).run(str(manifest), str(FIXTURES)) == {}
+    assert list(wh.iterdir()) == []
+
+
+def _jobs_started(spark, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_planning_starts_no_discovery_jobs(spark, tmp_path):
+    """The catalog's shape is declared and each file's column list is
+    read on the driver, so listing, selecting and planning every
+    Python-decoded source family start no Spark job; landing a table
+    costs its write and nothing more."""
+    from k8e_fetch_spark.sources import ingest
+
+    pipe = Pipeline(spark, DEFAULT_SPEC, str(tmp_path / "wh"))
+    manifest = str(FIXTURES / "manifest.json")
+    versions, n = _jobs_started(spark, lambda: pipe.fetch_versions(manifest))
+    assert n == 0
+    _, n = _jobs_started(spark, lambda: pipe.select_keys(versions, "current_cycle"))
+    assert n == 0
+    for name in (
+        "VR_Snapshot_20240514.tsv",
+        "ncvoter_Statewide.zip",
+        "Candidate_Listing_2022.csv",
+        "Candidate_Listing_2024.csv",
+        "VR_Snapshot_20240514.zip",
+    ):
+        spec = ingest.dispatch(name)
+        df, n = _jobs_started(
+            spark, lambda: ingest.read_source(spark, [str(FIXTURES / name)], spec)
+        )
+        assert n == 0, name
+    _, plain = _jobs_started(spark, lambda: df.write.parquet(str(tmp_path / "plain")))
+    landed, n = _jobs_started(spark, lambda: pipe._sink(df, "vr_snapshot_20240514"))
+    assert n <= plain
+    assert sorted(map(tuple, landed.collect())) == sorted(map(tuple, df.collect()))
+
+
 def test_stage_memoization_skip_compress(spark, tmp_path):
     """skip={'compress'} returns the loaded tables without building
     components."""
