@@ -23,13 +23,15 @@ Re-expresses the reference's import pipe — ``unzip -p f | iconv -f ENC
   matching no rule are synced-but-never-loaded (fetcher.bash:115-118).
 
 Scale notes: one zip member = one decode task (DEFLATE streams are not
-splittable). The rows it decodes to are spread over ``min(defaultParallelism,
-ceil(member bytes / spark.sql.files.maxPartitionBytes))`` partitions before
-repair and parse — Spark's own split size applied to the uncompressed
-member — and a member that fits one split adds no exchange. The column
-list (line 0) and the member size are read on the driver from the local
-file through the same member opener and line splitter the decode stage
-runs, so planning a load starts no Spark job.
+splittable). The rows it decodes to are spread round-robin before repair
+and parse over as many partitions as Spark's file scan would split the
+uncompressed member into (``FilePartition.maxSplitBytes``: at most
+``spark.sql.files.maxPartitionBytes`` per split, at least
+``spark.sql.files.openCostInBytes``, no more than the bytes per core),
+capped at the default parallelism; a member that is one split adds no
+exchange. The column list (line 0) and the member size are read on the
+driver from the local file through the same member opener and line
+splitter the decode stage runs, so planning a load starts no Spark job.
 """
 
 from __future__ import annotations
@@ -159,13 +161,20 @@ def _decode_member(name: str, stream: BinaryIO, encoding: str) -> Iterator[tuple
             yield name, i, ln
 
 
-def _head(path: str, encoding: str) -> tuple[str | None, int]:
-    r"""Line 0 (None when the file has no lines) and member size of a local
-    source file, read on the driver with the decode stage's own member
-    opener and line splitter — so BOMs, \r and undecodable bytes give the
-    same header here as in the decoded rows."""
-    with open(path, "rb") as f, _member(path, f) as (payload, size):
-        return next(_lines(payload, encoding), None), size
+def _head(path: str, encoding: str) -> str | None:
+    r"""Line 0 of a local source file (None when it has no lines), read on
+    the driver with the decode stage's own member opener and line
+    splitter — so BOMs, \r and undecodable bytes give the same header
+    here as in the decoded rows."""
+    with open(path, "rb") as f, _member(path, f) as (payload, _):
+        return next(_lines(payload, encoding), None)
+
+
+def _member_bytes(path: str) -> int:
+    """Uncompressed size of a local source file's member (zip central
+    directory; nothing is decompressed)."""
+    with open(path, "rb") as f, _member(path, f) as (_, size):
+        return size
 
 
 def raw_lines(spark: SparkSession, paths: list[str], encoding: str) -> DataFrame:
@@ -254,26 +263,20 @@ def read_plain_delimited(
     return df.toDF(*[normalize_header_name(c) for c in df.columns])
 
 
-_BYTE_UNITS = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40, "p": 1 << 50}
-
-
-def _conf_bytes(value: str) -> int:
-    """A Spark byte-size setting ("134217728b", "64m", "1kb", "4096") in
-    bytes; a bare number is bytes. Spark validates the value when it is
-    set."""
-    m = re.fullmatch(r"(\d+)([kmgtp]?)b?", value.strip().lower())
-    return int(m[1]) * _BYTE_UNITS[m[2]]
-
-
 def _decode_width(spark: SparkSession, member_bytes: int) -> int:
     """Partitions for the rows decoded from zip members of ``member_bytes``
-    uncompressed bytes: Spark's file split size applied to those bytes,
-    capped at the default parallelism."""
+    uncompressed bytes: the splits Spark's file scan would cut from an
+    uncompressed file that size — ``maxPartitionBytes``, but no smaller
+    than ``openCostInBytes`` and no larger than the bytes per core
+    (``FilePartition.maxSplitBytes``) — capped at the default
+    parallelism."""
     try:
         cores = spark.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect: no SparkContext handle
-        cores = 32
-    split = _conf_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes"))
+        conf = spark._jsparkSession.sessionState().conf()
+        max_split, open_cost = conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes()
+    except Exception:  # Spark Connect: no SparkContext handle; Spark's defaults
+        cores, max_split, open_cost = 32, 128 << 20, 4 << 20
+    split = min(max_split, max(open_cost, (member_bytes + open_cost) // cores))
     return min(cores, -(-member_bytes // split))
 
 
@@ -288,11 +291,10 @@ def read_source(spark: SparkSession, paths: list[str], spec: ReaderSpec) -> Data
         "utf-16be",
     )
     if needs_python or spec.repair:
-        heads = [_head(p, spec.encoding) for p in paths]
-        header = heads[0][0]
+        header = _head(paths[0], spec.encoding)
         if header is None:
             raise ValueError("no header row found")
-        width = _decode_width(spark, sum(n for _, n in heads)) if spec.zipped else 1
+        width = _decode_width(spark, sum(map(_member_bytes, paths))) if spec.zipped else 1
         df = parse_lines(
             raw_lines(spark, paths, spec.encoding),
             header,

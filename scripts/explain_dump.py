@@ -30,7 +30,7 @@ SHOWCASE = [
     ("sim_kmeans_assign", "k-means assignment, LITERAL-EXPRESSION twin kept on display (kmeans auto-selects literal-vs-Arrow by model size; pinned assignment-identical): zero-shuffle inlined argmin projection; only the k-row stats aggregate exchanges"),
     ("sim_topk_ivf", "IVF search: zero-shuffle Arrow coarse assign — batch matmul-argmax against the closure-shipped unit-centroid matrix (no Exchange on the N-row corpus until the final per-query top-k; the literal-fold twin is pinned assignment-identical and shown in sim_kmeans_assign below)"),
     ("dedup_minhash_lsh", "MinHash LSH: 64-bit hashed shingles on the id-partitioned persisted table -> whole-stage-codegen min-aggregate signatures (no Python) -> bucket window tags (size, anchor) in one band-key shuffle -> buffer-bounded clique (collect_list only under the cap) union row-level star pairs -> exact verify on candidates"),
-    ("ingest_zip_decode_repair", "zip ingest: binaryFile scan -> streaming mapInPandas decode -> JVM-side quote repair + from_csv parse; the column list is read on the driver (no probe job), and a member that fits one file split (spark.sql.files.maxPartitionBytes) keeps its decode task's partition, so there is NO Exchange — a larger one gets one round-robin Exchange to min(defaultParallelism, ceil(member bytes / split))"),
+    ("ingest_zip_decode_repair", "zip ingest: binaryFile scan -> streaming mapInPandas decode -> JVM-side quote repair + from_csv parse; the column list is read on the driver (no probe job), and a member that Spark's file scan would read as one split (FilePartition.maxSplitBytes applied to the uncompressed member: maxPartitionBytes, at least openCostInBytes, at most the bytes per core) keeps its decode task's partition, so there is NO Exchange — a larger one gets one round-robin Exchange to that split count, capped at defaultParallelism"),
     ("sim_quantize_int8", "int8 quantization: pure projection over the scan, zero shuffles"),
     ("text_vocabulary", "token explode -> ONE map-side-combined aggregate shuffle"),
     ("text_winnowing_fingerprint", "winnowing fingerprints: ZERO keyed shuffle — sliding-window-min fold inside the scan stage, explode of already-distinct (id, fp)"),

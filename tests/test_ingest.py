@@ -233,10 +233,12 @@ def test_source_without_lines_has_no_header(spark, tmp_path):
 
 
 def test_decode_width_follows_split_size(spark):
-    """A zip member that fits one file split keeps its decode task's
-    partition; a larger one is spread round-robin over
-    min(defaultParallelism, ceil(member bytes / split)) partitions
-    before repair and parse. Same rows either way."""
+    """A zip member that is one file split keeps its decode task's
+    partition; a larger one is spread round-robin over as many
+    partitions as Spark's file scan would split it into — at most
+    maxPartitionBytes per split, at least openCostInBytes, no more than
+    the bytes per core — capped at defaultParallelism. Same rows in
+    every plan."""
     import zipfile
 
     from k8e_fetch_spark.testing import formatted_plan
@@ -246,20 +248,25 @@ def test_decode_width_follows_split_size(spark):
     spec = ingest.dispatch(name)
     with zipfile.ZipFile(path) as zf:
         member_bytes = zf.infolist()[0].file_size
+    cores = spark.sparkContext.defaultParallelism
     narrow = ingest.read_source(spark, [path], spec)
     assert "Exchange" not in formatted_plan(narrow)
+    narrow_rows = sorted(map(tuple, narrow.collect()))
 
-    key, split = "spark.sql.files.maxPartitionBytes", 128
-    prev = spark.conf.get(key)
-    spark.conf.set(key, f"{split}b")
-    try:
-        wide = ingest.read_source(spark, [path], spec)
-        plan = formatted_plan(wide)
-        wide_rows = sorted(map(tuple, wide.collect()))
-    finally:
-        spark.conf.set(key, prev)
-    n = min(spark.sparkContext.defaultParallelism, -(-member_bytes // split))
-    assert n > 1
-    assert plan.count("RoundRobinPartitioning(") == 1, plan
-    assert f"RoundRobinPartitioning({n})" in plan, plan
-    assert wide_rows == sorted(map(tuple, narrow.collect()))
+    split = 128
+    for key, value, n in [
+        ("spark.sql.files.maxPartitionBytes", f"{split}b", min(cores, -(-member_bytes // split))),
+        # a negligible open cost leaves the bytes-per-core share: one split per core
+        ("spark.sql.files.openCostInBytes", "1b", cores),
+    ]:
+        prev = spark.conf.get(key)
+        spark.conf.set(key, value)
+        try:
+            wide = ingest.read_source(spark, [path], spec)
+            plan, rows = formatted_plan(wide), sorted(map(tuple, wide.collect()))
+        finally:
+            spark.conf.set(key, prev)
+        assert n > 1
+        assert plan.count("RoundRobinPartitioning(") == 1, plan
+        assert f"RoundRobinPartitioning({n})" in plan, plan
+        assert rows == narrow_rows

@@ -97,22 +97,34 @@ def test_live_listing_matches_recorded_manifest(spark, tmp_path):
         assert len(got) == len(versions), path.name
 
 
+_FAILFAST = r"(?s)MALFORMED_RECORD_IN_PARSING.*Parse Mode: FAILFAST"
+
+
 @pytest.mark.parametrize(
-    "text",
+    "text, error",
     [
-        '{"Versions": [{"Key": "data/ncvoter_Statewide.zip", "VersionId": "v9", "Size": 40',
-        '{"Versions": [{"Key": "a.zip", "Size": "forty"}]}',
-        "",
+        ('{"Versions": [{"Key": "data/ncvoter_Statewide.zip", "VersionId": "v9", "Size": 40', _FAILFAST),
+        ('{"Versions": [{"Key": "a.zip", "Size": "forty"}]}', _FAILFAST),
+        ("", "empty manifest file"),
     ],
     ids=["truncated", "mistyped", "zero_bytes"],
 )
-def test_broken_manifest_fails_loudly(spark, tmp_path, text):
-    """A listing that does not parse raises — by the first action at the
-    latest — and never reads as an empty listing."""
+def test_broken_manifest_fails_loudly(spark, tmp_path, text, error):
+    """A listing that does not parse never reads as an empty listing:
+    a truncated or mistyped one plans and then raises FAILFAST's
+    malformed-record error on the first action; a zero-byte file raises
+    ValueError when it is read."""
+    from py4j.protocol import Py4JJavaError
+
     path = tmp_path / "listing.json"
     path.write_text(text)
-    with pytest.raises(Exception):
-        read_manifest(spark, str(path)).collect()
+    if not text:
+        with pytest.raises(ValueError, match=error):
+            read_manifest(spark, str(path))
+        return
+    manifest = read_manifest(spark, str(path))
+    with pytest.raises(Py4JJavaError, match=error):
+        manifest.collect()
 
 
 def test_downstream_selection_source_agnostic(spark):
