@@ -86,22 +86,6 @@ def insert_ignore(existing: DataFrame, new: DataFrame) -> DataFrame:
     return existing.unionByName(insert_ignore_delta(existing, new))
 
 
-def exact_dedup_keep_first(
-    df: DataFrame, content_cols: Sequence[str], order_col: str
-) -> DataFrame:
-    """ext-exact-dedup: keep the first row (min ``order_col``) per
-    distinct content. GroupBy + min avoids a global window sort: one
-    shuffle on the content hash, map-side partial aggregation."""
-    aggs = [F.min(order_col).alias(order_col)]
-    return df.groupBy(*content_cols).agg(*aggs)
-
-
-def content_hash(cols: Sequence[str]) -> Column:
-    """256-bit content hash for hash-based dedup at scale: dedup on a
-    32-byte digest instead of shuffling wide text rows."""
-    return F.sha2(F.concat_ws("\x1f", *[F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in cols]), 256)
-
-
 def keep_best_per_cluster(
     clusters: DataFrame,
     quality: DataFrame,

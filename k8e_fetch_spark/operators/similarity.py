@@ -606,30 +606,6 @@ def _rademacher_planes(dim: int, n_bits: int, seed: int = 42) -> list[list[int]]
     return planes
 
 
-def cosine_lsh_signature(vec_col: Column, dim: int, n_bits: int = 16) -> Column:
-    """Random-hyperplane (SimHash-for-vectors) signature: bit b =
-    sign(v . r_b) with fixed Rademacher hyperplanes. Pure column math,
-    one zip_with dot product per bit over the scan — no shuffle; the
-    standard sketch for cosine LSH (P[bit match] = 1 - angle/pi).
-    ``vec_col`` must be a plain scan attribute (cheap to reference), so
-    the per-bit expressions do not trigger the projection-collapse
-    recompute pathology documented on minhash_signature."""
-    planes = _rademacher_planes(dim, n_bits)
-    bits = []
-    for b, row in enumerate(planes):
-        plane = F.array(*[F.lit(float(s)) for s in row])
-        d = F.aggregate(
-            F.zip_with(vec_col, plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(d > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long")))
-    out = bits[0]
-    for bit in bits[1:]:
-        out = out.bitwiseOR(bit)
-    return out
-
-
 def cosine_lsh_band_keys(
     vec_col: Column, dim: int, n_bands: int, bits_per_band: int, seed: int = 42
 ) -> Column:

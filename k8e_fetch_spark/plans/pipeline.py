@@ -36,57 +36,30 @@ from __future__ import annotations
 
 import os
 import re
-import shutil
 from collections.abc import Iterable, Sequence
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from k8e_fetch_spark.operators.dedup import insert_ignore
 from k8e_fetch_spark.operators.projection import project
+from k8e_fetch_spark.plans import snapshots as snap
 from k8e_fetch_spark.plans.spec import Compressor, PipelineSpec
 from k8e_fetch_spark.sources import ingest, manifest as mf
 
 
 class Pipeline:
-    """``table_format`` selects the component-table storage layout.
-    Every format runs the same compress stage — one insert-ignore merge
-    per component per run — and differs only in how the merge result is
-    stored and published:
+    """The fetch → select → sync → load → compress flow over one warehouse.
 
-    - ``"parquet"`` (default): plain dir-per-component; each merge
-      rewrites the component through the temp-write + atomic swap of
-      :meth:`_sink`.
-    - ``"snapshot"``: pointer-flip snapshot tables
-      (plans/snapshots.py:merge_insert_ignore) — atomic merges, cheap
-      time travel, O(table) write per merge.
-    - ``"manifest"``: incremental manifest tables
-      (merge_insert_ignore_incremental) — O(delta) write per merge,
-      the 100 TB accretion shape.
-    - ``"occ"``: manifest tables with the CONCURRENT-WRITER
-      commit protocol (merge_insert_ignore_occ — version-claim CAS,
-      lost races recompute-and-retry). Same O(delta) writes; pick it
-      when more than one pipeline run can target the warehouse.
-
-    ``compact_target_mb`` (optional) runs post-compress small-files
-    maintenance on every component: parquet dirs are rewritten to
-    ~target-sized files (operators/scale.py:compact_small_files, then
-    atomically swapped in); manifest tables are checkpointed into a
-    single compacted base sized by the same target
-    (plans/snapshots.py:checkpoint). Snapshot tables skip it: every
-    merge already rewrites the full table in one pass, so there is no
-    small-file accretion to repair.
-
-    ``zorder_by`` (optional) lays each component
-    out in Z-order on 2-3 columns as the same post-compress pass —
-    Delta's ``OPTIMIZE ... ZORDER BY`` from the pipeline front door.
-    Works on every format (parquet rewrite+swap; snapshot pointer
-    flip; manifest/occ checkpoint) and on string keys
-    (operators/scale.py:write_zordered_auto — sampled range-id
-    bucketing). Components missing a named column keep their plain
-    layout. Composes with ``compact_target_mb``: one rewrite does
-    both (files sized by the target, rows Z-clustered).
+    - ``table_format``: the component-table layout, one of
+      ``parquet`` (default), ``snapshot``, ``manifest``, ``occ``
+      (plans/snapshots.py describes each).
+    - ``compact_target_mb``: after compress, rewrite each component into
+      files of about this size.
+    - ``zorder_by``: after compress, lay out each component that has
+      these 2-3 columns in Z-order; composes with ``compact_target_mb``
+      in one rewrite.
+    - ``cas``: the CAS backend for ``occ`` commits (plans/cas.py);
+      None uses the hard-link claim.
     """
 
     def __init__(
@@ -99,9 +72,9 @@ class Pipeline:
         zorder_by: Sequence[str] | None = None,
         cas=None,
     ):
-        if table_format not in ("parquet", "snapshot", "manifest", "occ"):
+        if table_format not in snap.TABLE_FORMATS:
             raise ValueError(
-                f"table_format must be parquet|snapshot|manifest|occ, got {table_format!r}"
+                f"table_format must be {'|'.join(snap.TABLE_FORMATS)}, got {table_format!r}"
             )
         if zorder_by is not None and len(zorder_by) not in (2, 3):
             raise ValueError(
@@ -119,9 +92,6 @@ class Pipeline:
         self.table_format = table_format
         self.compact_target_mb = compact_target_mb
         self.zorder_by = tuple(zorder_by) if zorder_by else None
-        #: CAS backend for OCC commits (plans/cas.py) — None = LinkCas.
-        #: ConditionalPutCas routes every version claim through an
-        #: object store's If-None-Match PUT (the Delta-on-S3 shape).
         self.cas = cas
         os.makedirs(warehouse, exist_ok=True)
 
@@ -178,12 +148,9 @@ class Pipeline:
 
     def compress(self, tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
         """Build each component's batch (the union of its per-source
-        projections) and merge it into the component table exactly once
-        per run: existing ∪ (distinct batch ∖ existing), null-safe. The
-        table format decides only where the existing state lives and how
-        the merge result is published."""
-        from k8e_fetch_spark.plans import snapshots as snap
-
+        projections), merge it into the component table exactly once
+        per run — existing ∪ (distinct batch ∖ existing), null-safe —
+        then apply the optional relayout."""
         batches: dict[str, DataFrame] = {}
         for comp in self.spec.compressors:
             matched = self.matched_tables(comp, tables)
@@ -195,113 +162,29 @@ class Pipeline:
                     batches[binding.component] = (
                         src if prev is None else prev.unionByName(src)
                     )
+        target_bytes = (
+            None if self.compact_target_mb is None else self.compact_target_mb << 20
+        )
         components: dict[str, DataFrame] = {}
         for name, batch in batches.items():
-            tdir = self._component_path(name)
-            if self.table_format == "parquet":
-                # CREATE TABLE IF NOT EXISTS … LIMIT 0 + INSERT OR IGNORE;
-                # the result replaces the component directory
-                existing = self._read_component(name, batch)
-                components[name] = self._sink(insert_ignore(existing, batch), name)
-            elif self.table_format == "snapshot":
-                snap.merge_insert_ignore(self.spark, tdir, batch)
-                components[name] = snap.read_table(self.spark, tdir)
-            elif self.table_format == "occ":
-                snap.merge_insert_ignore_occ(self.spark, tdir, batch, cas=self.cas)
-                components[name] = snap.read_manifest_table(self.spark, tdir)
-            else:
-                snap.merge_insert_ignore_incremental(self.spark, tdir, batch)
-                components[name] = snap.read_manifest_table(self.spark, tdir)
-        self._maybe_compact(components)
-        return components
-
-    def _maybe_compact(self, components: dict[str, DataFrame]) -> None:
-        """Post-compress table maintenance (opt-in): small-files
-        compaction via ``compact_target_mb`` and/or Z-order layout via
-        ``zorder_by`` (VERDICT r13 #7 — the Delta ``OPTIMIZE [ZORDER
-        BY]`` pair as one pass); re-points each entry at the rewritten
-        table. A component missing any ``zorder_by`` column keeps its
-        plain layout (the spec's component column lists differ — only
-        tables that HAVE the dimensions get the clustering). Snapshot
-        format: compaction is a no-op (every merge already rewrites
-        the table in one file set) but Z-order applies
-        (plans/snapshots.py:rewrite_snapshot_zordered)."""
-        if self.compact_target_mb is None and not self.zorder_by:
-            return
-        import math
-
-        from k8e_fetch_spark.operators.scale import (
-            compact_small_files,
-            write_zordered_auto,
-        )
-        from k8e_fetch_spark.plans import snapshots as snap
-
-        target_bytes = (self.compact_target_mb or 128) << 20
-        for name in list(components):
             path = self._component_path(name)
+            if self.table_format == "parquet":
+                merged = merge_parquet(self.spark, path, batch)
+            else:
+                merged = snap.merge_table(
+                    self.spark, path, batch, self.table_format, cas=self.cas
+                )
+            # a component missing a zorder_by column keeps its layout
             zcols = (
                 list(self.zorder_by)
-                if self.zorder_by
-                and set(self.zorder_by) <= set(components[name].columns)
+                if self.zorder_by and set(self.zorder_by) <= set(merged.columns)
                 else None
             )
-            if self.table_format == "snapshot":
-                if zcols:
-                    live = sum(
-                        f.stat().st_size
-                        for f in (
-                            Path(path) / snap.current_snapshot(path)
-                        ).rglob("*.parquet")
-                    )
-                    snap.rewrite_snapshot_zordered(
-                        self.spark,
-                        path,
-                        zcols,
-                        n_files=max(1, math.ceil(live / target_bytes)),
-                    )
-                    components[name] = snap.read_table(self.spark, path)
-                continue
-            if self.table_format in ("manifest", "occ"):
-                if self.compact_target_mb is None and not zcols:
-                    continue
-                live = sum(
-                    f.stat().st_size
-                    for d in snap._manifest_dirs(Path(path), snap.current_manifest(path))
-                    for f in (Path(path) / d).rglob("*.parquet")
-                )
-                snap.checkpoint(
-                    self.spark,
-                    path,
-                    n_files=max(1, math.ceil(live / target_bytes)),
-                    zorder_by=zcols,
-                    cas=self.cas,
-                )
-                # OCC tables vacuum under the default retention window
-                # (ADVICE r13): superseded dirs younger than the window
-                # survive this pass — a concurrent writer's in-flight
-                # delta must never be deleted — and age out of a later
-                # vacuum. Pointer tables are single-writer: immediate.
-                snap.vacuum_manifest(path)
-                components[name] = snap.read_manifest_table(self.spark, path)
-            else:
-                if zcols:
-                    tmp = path + ".__zorder__"
-                    src = self.spark.read.parquet(path)
-                    live = sum(
-                        f.stat().st_size for f in Path(path).rglob("*.parquet")
-                    )
-                    write_zordered_auto(
-                        src, tmp, zcols, n_files=max(1, math.ceil(live / target_bytes))
-                    )
-                    shutil.rmtree(path)
-                elif self.compact_target_mb is not None:
-                    tmp = path + ".__compact__"
-                    compact_small_files(self.spark, path, tmp, target_bytes=target_bytes)
-                    shutil.rmtree(path)
-                else:
-                    continue
-                os.replace(tmp, path)
-                components[name] = self.spark.read.parquet(path)
+            relaid = snap.relayout(
+                self.spark, path, self.table_format, target_bytes, zcols, cas=self.cas
+            )
+            components[name] = merged if relaid is None else relaid
+        return components
 
     # --- run ------------------------------------------------------------
     def run(
@@ -316,19 +199,11 @@ class Pipeline:
             selected = self.select_keys(versions, group)
             paths = self.sync(selected, data_dir)
             tables = self.load(paths)
-        else:  # memoized: re-read landed tables from the warehouse
-            # component tables in snapshot/manifest/occ format live
-            # beside the landed tables but are NOT flat parquet dirs —
-            # skip anything carrying a table-format marker file (OCC
-            # tables have no pointer, only the _OCC marker; reading one
-            # flat would treat its manifest-*.json files as data)
+        else:  # memoized: re-read the landed tables from the warehouse
             tables = {
                 n: self.spark.read.parquet(os.path.join(self.warehouse, n))
                 for n in os.listdir(self.warehouse)
-                if not any(
-                    os.path.exists(os.path.join(self.warehouse, n, ptr))
-                    for ptr in ("_CURRENT", "_CURRENT_MANIFEST", "_OCC")
-                )
+                if snap.is_flat_table(os.path.join(self.warehouse, n))
             }
         if "compress" in skip:
             return tables
@@ -338,31 +213,18 @@ class Pipeline:
     def _component_path(self, name: str) -> str:
         return os.path.join(self.warehouse, name)
 
-    def _read_component(self, name: str, like: DataFrame) -> DataFrame:
-        """Existing component table, or its empty clone (op-schema-clone:
-        CREATE TABLE IF NOT EXISTS … AS SELECT … LIMIT 0)."""
-        path = self._component_path(name)
-        if os.path.exists(path):
-            return self.spark.read.parquet(path)
-        return like.limit(0)
-
     def _sink(self, df: DataFrame, name: str) -> DataFrame:
-        """op-table-sink: land as parquet and return the re-read frame.
+        """op-table-sink: land ``df`` as the flat parquet table ``name``
+        and return the re-read frame (no job). Cluster form: Delta MERGE."""
+        return snap.write_flat(df, self._component_path(name))
 
-        Written to a temp dir then swapped, so a component can be merged
-        with its own previous contents (read-modify-write would otherwise
-        race with Spark's lazy reads). The re-read declares the schema
-        just written — a file source makes every field nullable, which is
-        what footer inference would give — so it starts no job.
-        Cluster form: Delta MERGE.
-        """
-        path = self._component_path(name)
-        tmp = path + ".__tmp__"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.replace(tmp, path)
-        return self.spark.read.schema(df.schema).parquet(path)
+
+def merge_parquet(spark: SparkSession, path: str, batch: DataFrame) -> DataFrame:
+    """op-insert-ignore into the flat parquet table at ``path``: CREATE
+    TABLE IF NOT EXISTS … LIMIT 0 (op-schema-clone), INSERT OR IGNORE,
+    and the result replaces the table. Returns the re-read table."""
+    existing = spark.read.parquet(path) if os.path.exists(path) else batch.limit(0)
+    return snap.write_flat(insert_ignore(existing, batch), path)
 
 
 def write_jdbc(

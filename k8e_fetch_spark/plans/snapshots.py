@@ -1,45 +1,57 @@
-"""Transactional snapshot-pointer table: atomic MERGE semantics on
-plain parquet, no table-format library required.
+"""Component-table formats: how a component table is laid out, merged,
+rewritten and published. No other module knows the on-disk layout.
 
 The reference's Compress stage merges with ``INSERT OR IGNORE`` into a
-SQLite table (/root/reference/bin/fetcher.bash:157-159) — SQLite gives
-it transactionality for free. The Spark-side ``insert_ignore``
-(operators/dedup.py) reproduces the merge SEMANTICS (null-safe
-left-anti + union, idempotency-tested), but appending parquet files in
-place is not atomic: a failed job leaves partial files that a
-concurrent reader sees as data. Production closes this with a
-transactional table format (Delta/Iceberg MERGE — the documented
-upgrade path, and those libraries are drop-in replacements for this
-module); this module closes it PORTABLY with the classic
-snapshot-pointer pattern those formats generalize:
+SQLite table with a unique index (fetcher.bash:157-159), and SQLite
+makes each merge transactional. ``insert_ignore`` (operators/dedup.py)
+gives the merge semantics; this module gives the atomic publish on
+plain parquet, with no table-format library, in four layouts
+(:data:`TABLE_FORMATS`):
 
-- every merge writes a COMPLETE new snapshot directory
-  ``snap-<n+1>/`` next to the current one (never touching it);
-- the table's state is a tiny ``_CURRENT`` pointer file naming the
-  live snapshot, published with write-temp-then-``os.replace`` — the
-  same atomic-rename primitive the marker files elsewhere in this repo
-  use (POSIX rename atomicity);
-- readers resolve the pointer, then read only that directory. A crash
-  mid-write leaves an orphaned half-written ``snap-*`` directory and
-  the pointer still naming the previous snapshot — the table is never
-  observed in a partial state. Orphans are garbage, not corruption,
-  and ``vacuum`` removes them.
+- ``parquet``: a flat directory. Every rewrite lands in a temp sibling
+  (``<table>.__tmp__``) that then replaces the table
+  (:func:`write_flat`).
+- ``snapshot``: every merge writes a complete ``snap-<n>/`` beside the
+  live one and flips the ``_CURRENT`` pointer. O(table) per merge —
+  the right trade for dimension tables, which are orders of magnitude
+  smaller than facts.
+- ``manifest``: ``_CURRENT_MANIFEST`` names a JSON manifest listing the
+  live data directories. A merge writes only ``new ∖ current`` as
+  ``delta-<n>/`` plus ``manifest-<n>.json``: O(delta) per merge.
+  Reads open one directory per live delta; :func:`checkpoint` rewrites
+  the live set into one ``base-<n>/`` to bound that.
+- ``occ``: manifest tables for concurrent writers, marked by ``_OCC``.
+  The version number is the compare-and-swap token: a commit claims
+  ``manifest-<n>.json`` atomically through the CAS seam (plans/cas.py)
+  and a lost race recomputes its delta against the winner's table.
+  Current is the highest parseable manifest, so there is no pointer
+  to race. Data directories carry a writer-unique suffix, so two
+  writers never write the same path.
 
-Scale notes: rewriting the full table per merge is the snapshot
-pattern's honest cost (Delta/Iceberg avoid it with file-level
-manifests); it is the right trade for dimension/component tables —
-the reference's merge targets — which are orders of magnitude smaller
-than facts. The merge itself is the same left-anti + union plan as
-``insert_ignore`` (one keyed shuffle, broadcastable when the new
-batch is small). Concurrent WRITERS are out of scope (single-writer,
-like the bash pipeline's serialized runs); last-pointer-wins if two
-race, never a torn table.
+Invariants, for every format:
+
+- a reader only ever sees a fully published table: pointers flip by
+  atomic rename, OCC versions are claimed atomically, and a flat table
+  is replaced only after its new contents are completely written;
+- a crash leaves unreferenced directories or manifests — garbage for
+  :func:`vacuum` / :func:`vacuum_manifest`, never a torn table — and a
+  flat table's temp sibling is never read as a table
+  (:func:`is_flat_table`);
+- merging a batch the table already holds adds no rows, and on
+  manifest and OCC tables publishes nothing.
+
+Delta Lake and Iceberg generalize these layouts and are drop-in
+replacements at cluster scale.
 """
 
 from __future__ import annotations
 
+import json
+import math
 import os
-from collections.abc import Sequence
+import shutil
+import time
+from collections.abc import Callable, Sequence
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,7 +65,107 @@ from k8e_fetch_spark.plans.cas import (  # noqa: F401  (re-export: public API)
     ManifestConflictError,
 )
 
+TABLE_FORMATS = ("parquet", "snapshot", "manifest", "occ")
+
+# suffix of the temp sibling a flat table's rewrite lands in before it
+# replaces the table
+_SWAP_SUFFIX = ".__tmp__"
+
 _POINTER = "_CURRENT"
+_MANIFEST_POINTER = "_CURRENT_MANIFEST"
+_OCC_MARKER = "_OCC"
+
+# Default vacuum retention for OCC tables (see vacuum_manifest): an
+# unreferenced dir younger than this is presumed to be a concurrent
+# writer's in-flight delta, not garbage. Delta Lake defaults to 7 days;
+# one day is generous for a merge attempt's write-to-CAS gap while
+# keeping local test garbage collectable by backdating mtimes.
+OCC_VACUUM_RETAIN_SECONDS = 24 * 3600.0
+
+
+# ---------------------------------------------------------------------------
+# Shared mechanics
+# ---------------------------------------------------------------------------
+
+
+def _version(name: str) -> int:
+    """N of ``snap-N``, ``manifest-N.json``, ``delta-N[-writer]``."""
+    return int(name.split("-")[1].split(".")[0])
+
+
+def _flip(pointer: Path, name: str) -> None:
+    """Atomically point ``pointer`` at ``name`` (write temp, rename)."""
+    tmp = pointer.with_name(f".{pointer.name}.{os.getpid()}.tmp")
+    tmp.write_text(name)
+    tmp.replace(pointer)  # os.replace: atomic on POSIX
+
+
+def _keep_window(names: list[str], live: str | None, keep: int) -> set[str]:
+    """The live entry plus its ``keep - 1`` predecessors in ``names``
+    (sorted). The window follows the live entry, never lexical order: a
+    crash orphan can carry a higher number than live. Without a live
+    entry on disk (no pointer, or a dangling one) the lexically latest
+    ``keep`` survive, so a bad pointer degrades to readable garbage and
+    never to deleting every data directory."""
+    if live in names:
+        upto = names.index(live)
+        return set(names[max(0, upto - keep + 1) : upto + 1]) | {live}
+    return set(names[-keep:])
+
+
+def _rewrite(
+    df: DataFrame, dest: str | Path, n_files: int, zorder_by: Sequence[str] | None
+) -> None:
+    """Write ``df`` to ``dest`` as ``n_files`` files: Z-ordered on
+    ``zorder_by`` (one range exchange), else a shuffle-free coalesce."""
+    if zorder_by:
+        from k8e_fetch_spark.operators.scale import write_zordered_auto
+
+        write_zordered_auto(df, str(dest), zorder_by, n_files=n_files)
+    else:
+        df.coalesce(n_files).write.mode("overwrite").parquet(str(dest))
+
+
+# ---------------------------------------------------------------------------
+# Flat parquet tables
+# ---------------------------------------------------------------------------
+
+
+def _swap(path: str | Path, write: Callable[[str], None]) -> None:
+    """``write`` the table's new contents into its temp sibling, then
+    replace the table with it. The new contents may be computed from
+    the table itself: Spark reads lazily, so writing in place would
+    race the read."""
+    path = str(path)
+    tmp = path + _SWAP_SUFFIX
+    write(tmp)
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    os.replace(tmp, path)
+
+
+def write_flat(df: DataFrame, path: str | Path) -> DataFrame:
+    """Land ``df`` as the flat parquet table ``path`` (temp write, then
+    swap) and return the re-read table. The re-read declares the schema
+    just written — a file source makes every field nullable, which is
+    what footer inference would give — so it starts no job."""
+    _swap(path, df.write.mode("overwrite").parquet)
+    return df.sparkSession.read.schema(df.schema).parquet(str(path))
+
+
+def is_flat_table(path: str | Path) -> bool:
+    """True for a flat parquet table: neither a swap's temp sibling
+    (what a write that died before its swap leaves) nor a snapshot,
+    manifest or OCC table, which carry a marker file."""
+    path = Path(path)
+    return not path.name.endswith(_SWAP_SUFFIX) and not any(
+        (path / m).exists() for m in (_POINTER, _MANIFEST_POINTER, _OCC_MARKER)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Snapshot-pointer tables
+# ---------------------------------------------------------------------------
 
 
 def _pointer_path(table_dir: str | Path) -> Path:
@@ -78,11 +190,15 @@ def read_table(spark: SparkSession, table_dir: str | Path) -> DataFrame | None:
     return spark.read.parquet(str(Path(table_dir) / snap))
 
 
-def _publish(table_dir: Path, snap_name: str) -> None:
-    ptr = _pointer_path(table_dir)
-    tmp = ptr.with_name(f".{_POINTER}.{os.getpid()}.tmp")
-    tmp.write_text(snap_name)
-    tmp.replace(ptr)  # os.replace: atomic on POSIX
+def _publish_snapshot(
+    table_dir: Path, after: str | None, write: Callable[[str], None]
+) -> str:
+    """``write`` the snapshot that follows ``after``, then flip the
+    pointer to it. Returns its name."""
+    snap_name = f"snap-{(0 if after is None else _version(after)) + 1:06d}"
+    write(str(table_dir / snap_name))
+    _flip(_pointer_path(table_dir), snap_name)
+    return snap_name
 
 
 def merge_insert_ignore(
@@ -103,17 +219,14 @@ def merge_insert_ignore(
     table_dir = Path(table_dir)
     table_dir.mkdir(parents=True, exist_ok=True)
     cur_name = current_snapshot(table_dir)
-    if cur_name is None:
-        merged = new.distinct()
-        next_id = 1
-    else:
-        cur_df = spark.read.parquet(str(table_dir / cur_name))
-        merged = insert_ignore(cur_df, new)
-        next_id = int(cur_name.split("-")[1]) + 1
-    snap_name = f"snap-{next_id:06d}"
-    merged.write.mode("overwrite").parquet(str(table_dir / snap_name))
-    _publish(table_dir, snap_name)
-    return snap_name
+    merged = (
+        new.distinct()
+        if cur_name is None
+        else insert_ignore(spark.read.parquet(str(table_dir / cur_name)), new)
+    )
+    return _publish_snapshot(
+        table_dir, cur_name, merged.write.mode("overwrite").parquet
+    )
 
 
 def rewrite_snapshot_zordered(
@@ -122,45 +235,29 @@ def rewrite_snapshot_zordered(
     zorder_by: Sequence[str],
     n_files: int = 1,
 ) -> str:
-    """Maintenance action for snapshot-pointer tables (VERDICT r13 #7):
-    rewrite the live snapshot in Z-order on the given columns and flip
-    the pointer — content identity, layout change only (the snapshot
-    analog of :func:`checkpoint`'s ``zorder_by``). The superseded
-    snapshot becomes ordinary :func:`vacuum` garbage."""
-    from k8e_fetch_spark.operators.scale import write_zordered_auto
-
+    """Rewrite the live snapshot in Z-order on the given columns and
+    flip the pointer: same rows, new layout (the snapshot analog of
+    :func:`checkpoint`'s ``zorder_by``). The superseded snapshot becomes
+    ordinary :func:`vacuum` garbage."""
     table_dir = Path(table_dir)
     cur = current_snapshot(table_dir)
     if cur is None:
         raise ValueError(f"empty snapshot table: {table_dir}")
-    next_id = int(cur.split("-")[1]) + 1
-    snap_name = f"snap-{next_id:06d}"
     df = spark.read.parquet(str(table_dir / cur))
-    write_zordered_auto(df, str(table_dir / snap_name), zorder_by, n_files=n_files)
-    _publish(table_dir, snap_name)
-    return snap_name
+    return _publish_snapshot(
+        table_dir, cur, lambda dest: _rewrite(df, dest, n_files, zorder_by)
+    )
 
 
 def vacuum(table_dir: str | Path, keep: int = 1) -> list[str]:
     """Remove orphaned / superseded snapshot directories, keeping the
     live snapshot plus ``keep - 1`` predecessors (time travel on the
     cheap). Never touches the pointer. Returns removed names."""
-    import shutil
-
     table_dir = Path(table_dir)
-    live = current_snapshot(table_dir)
     snaps = sorted(
         p.name for p in table_dir.iterdir() if p.is_dir() and p.name.startswith("snap-")
     )
-    # the keep window is the LIVE snapshot plus its predecessors — a
-    # crash orphan can carry a HIGHER number than live (its writer died
-    # before the flip), and lexically-latest would wrongly protect it
-    if live is not None and live in snaps:
-        upto = snaps.index(live)
-        keep_set = set(snaps[max(0, upto - keep + 1) : upto + 1])
-        keep_set.add(live)
-    else:
-        keep_set = set(snaps[-keep:])
+    keep_set = _keep_window(snaps, current_snapshot(table_dir), keep)
     removed = []
     for name in snaps:
         if name not in keep_set:
@@ -170,39 +267,53 @@ def vacuum(table_dir: str | Path, keep: int = 1) -> list[str]:
 
 
 # ---------------------------------------------------------------------------
-# Manifest tables (r12): incremental merges, the Iceberg/Delta mechanism
-# portably. The snapshot-pointer table above rewrites the FULL table per
-# merge — its documented honest cost, fine for dimension tables. A
-# manifest table removes it: the table's state is a _CURRENT pointer to
-# a small JSON MANIFEST listing live data directories; a merge computes
-# `new ∖ current` (the same null-safe anti-join) and writes ONLY that
-# delta as a new directory plus a new manifest — write volume drops
-# from O(table) to O(delta). Atomicity is unchanged (complete
-# delta + complete manifest, then one atomic pointer rename); a crash
-# leaves an unreferenced directory/manifest, garbage never corruption.
-# Read amplification grows with the delta count, so `checkpoint`
-# periodically rewrites the live set into one compacted base (the
-# Iceberg "rewrite data files" maintenance action) — compose with
-# compact_small_files-style width sizing upstream if needed.
+# Manifest tables (pointer and OCC)
 # ---------------------------------------------------------------------------
-
-_MANIFEST_POINTER = "_CURRENT_MANIFEST"
 
 
 def _manifest_pointer(table_dir: str | Path) -> Path:
     return Path(table_dir) / _MANIFEST_POINTER
 
 
+def _is_occ_table(table_dir: Path) -> bool:
+    return (Path(table_dir) / _OCC_MARKER).exists()
+
+
+def _manifest_dirs(table_dir: Path, manifest_name: str) -> list[str]:
+    return json.loads((table_dir / manifest_name).read_text())["dirs"]
+
+
+def _manifest_files(table_dir: Path) -> list[Path]:
+    """Every ``manifest-*`` file in the table, ascending by name."""
+    return sorted(
+        p for p in Path(table_dir).iterdir()
+        if p.is_file() and p.name.startswith("manifest-")
+    )
+
+
+def _parses(manifest: Path) -> bool:
+    """Whether ``manifest`` is readable as a manifest. A committed one
+    always is; a torn or hand-damaged one (missing, truncated,
+    non-UTF-8, not an object, no ``dirs``) is not."""
+    try:
+        _manifest_dirs(manifest.parent, manifest.name)
+    except (OSError, ValueError, KeyError, TypeError):
+        return False
+    return True
+
+
 def current_manifest(table_dir: str | Path) -> str | None:
     """Name of the live manifest file, or None for an empty table.
 
     Pointer tables (single-writer) resolve the ``_CURRENT_MANIFEST``
-    pointer; OCC tables (``_OCC`` marker — see the r13 section below)
-    resolve the highest committed manifest, because under link-CAS the
-    version chain itself is the commit log and a pointer would be a
-    second, raceable source of truth."""
-    if _is_occ_table(Path(table_dir)):
-        return _max_valid_manifest(Path(table_dir))
+    pointer. OCC tables resolve the highest parseable manifest: their
+    version chain is the commit log, and a pointer would be a second,
+    raceable source of truth."""
+    table_dir = Path(table_dir)
+    if _is_occ_table(table_dir):
+        return next(
+            (p.name for p in reversed(_manifest_files(table_dir)) if _parses(p)), None
+        )
     try:
         name = _manifest_pointer(table_dir).read_text().strip()
     except FileNotFoundError:
@@ -210,28 +321,11 @@ def current_manifest(table_dir: str | Path) -> str | None:
     return name or None
 
 
-def _manifest_dirs(table_dir: Path, manifest_name: str) -> list[str]:
-    import json
-
-    return json.loads((table_dir / manifest_name).read_text())["dirs"]
-
-
 def manifest_versions(table_dir: str | Path) -> list[int]:
     """Version numbers of every manifest still on disk, ascending —
     the time-travel window (``vacuum_manifest``'s ``keep`` bounds it).
-    Torn manifests (pointer tables only — impossible under OCC's
-    link-CAS) are excluded: a version is listed only if it parses."""
-    import json
-
-    out = []
-    for p in sorted(Path(table_dir).iterdir()):
-        if p.is_file() and p.name.startswith("manifest-"):
-            try:
-                json.loads(p.read_text())["dirs"]
-            except Exception:
-                continue
-            out.append(int(p.name.split("-")[1].split(".")[0]))
-    return out
+    A version is listed only if its manifest parses."""
+    return [_version(p.name) for p in _manifest_files(Path(table_dir)) if _parses(p)]
 
 
 def read_manifest_table(
@@ -265,26 +359,105 @@ def read_manifest_table(
     return spark.read.parquet(*[str(table_dir / d) for d in dirs])
 
 
+def _data_dir_name(kind: str, version: int, occ: bool) -> str:
+    """``delta-N`` / ``base-N``; on OCC tables with a writer-unique
+    suffix, so concurrent writers never write the same directory."""
+    name = f"{kind}-{version:06d}"
+    return f"{name}-{os.getpid()}{os.urandom(3).hex()}" if occ else name
+
+
+def _commit_manifest_cas(
+    table_dir: Path,
+    manifest_name: str,
+    payload: str,
+    cas: CasBackend | None = None,
+) -> None:
+    """Atomically claim ``manifest_name`` through the CAS seam
+    (plans/cas.py). Default :class:`LinkCas` is the hard-link claim;
+    :class:`ConditionalPutCas` commits through an object store's
+    ``If-None-Match`` PUT. Either way the claim wins exactly once — a
+    taken version raises :class:`ManifestConflictError`."""
+    (cas or DEFAULT_CAS).claim(Path(table_dir), manifest_name, payload)
+
+
+def _commit_manifest(
+    table_dir: Path, version: int, dirs: list[str], occ: bool, cas: CasBackend | None
+) -> str:
+    """Publish ``manifest-<version>.json`` listing ``dirs``; the last
+    of ``dirs`` is the directory this commit wrote. A pointer table
+    writes the manifest and flips ``_CURRENT_MANIFEST``; an OCC table
+    claims the version through the CAS, and on a lost race removes its
+    own directory and raises :class:`ManifestConflictError`."""
+    name = f"manifest-{version:06d}.json"
+    payload = json.dumps({"dirs": dirs})
+    if not occ:
+        (table_dir / name).write_text(payload)
+        _flip(_manifest_pointer(table_dir), name)
+        return name
+    try:
+        _commit_manifest_cas(table_dir, name, payload, cas=cas)
+    except ManifestConflictError:
+        shutil.rmtree(table_dir / dirs[-1], ignore_errors=True)
+        raise
+    return name
+
+
+def _merge_manifest(
+    spark: SparkSession,
+    table_dir: Path,
+    new: DataFrame,
+    occ: bool,
+    attempts: int,
+    cas: CasBackend | None,
+) -> str:
+    """The manifest merge: read the current table, write ``new ∖
+    current`` as a delta directory, commit a manifest listing it after
+    the live dirs. A contained batch gives an empty delta, which is
+    dropped and publishes nothing (the current name is returned). A
+    lost OCC race recomputes against the winner's table — the winner
+    may have inserted some of this batch — up to ``attempts`` times."""
+    last_err: Exception | None = None
+    for _ in range(attempts):
+        cur_name = current_manifest(table_dir)
+        if cur_name is None:
+            delta, live, version = new.distinct(), [], 1
+        else:
+            delta = insert_ignore_delta(read_manifest_table(spark, table_dir), new)
+            live, version = _manifest_dirs(table_dir, cur_name), _version(cur_name) + 1
+        delta_name = _data_dir_name("delta", version, occ)
+        delta.write.mode("overwrite").parquet(str(table_dir / delta_name))
+        # the emptiness probe reads the WRITTEN parquet (one footer), not
+        # the plan, so nothing is recomputed
+        if cur_name is not None and spark.read.parquet(
+            str(table_dir / delta_name)
+        ).limit(1).count() == 0:
+            shutil.rmtree(table_dir / delta_name, ignore_errors=True)
+            return cur_name
+        try:
+            return _commit_manifest(table_dir, version, [*live, delta_name], occ, cas)
+        except ManifestConflictError as e:
+            last_err = e
+    raise ManifestConflictError(
+        f"gave up after {attempts} lost commit races in {table_dir}"
+    ) from last_err
+
+
 def merge_insert_ignore_incremental(
     spark: SparkSession,
     table_dir: str | Path,
     new: DataFrame,
 ) -> str:
-    """Incremental op-insert-ignore MERGE: write only ``new ∖ current``
-    as a delta directory, publish a manifest referencing it plus every
-    prior live directory. Returns the published manifest name.
-    Idempotent: re-merging a contained batch publishes a manifest with
-    the SAME directory list (an empty delta writes nothing — no delta
-    dir, no new manifest; the current name is returned unchanged, so
-    retries cannot grow the table or the manifest chain).
+    """Incremental op-insert-ignore MERGE on a pointer manifest table:
+    write only ``new ∖ current`` as a delta directory, publish a
+    manifest referencing it plus every prior live directory. Returns
+    the published manifest name. Idempotent: a contained batch writes
+    no delta and no manifest, and the current name is returned, so
+    retries cannot grow the table or the manifest chain.
 
     One keyed anti-join shuffle per merge (``insert_ignore_delta`` —
     broadcastable when the batch is small); write volume is the delta
-    alone. Scale contract: merges are O(delta) writes, reads are
-    O(live dirs) opens — bound the latter with :func:`checkpoint`
-    every K merges."""
-    import json
-
+    alone. Reads are O(live dirs) opens — bound them with
+    :func:`checkpoint` every K merges."""
     table_dir = Path(table_dir)
     table_dir.mkdir(parents=True, exist_ok=True)
     if _is_occ_table(table_dir):
@@ -293,35 +466,45 @@ def merge_insert_ignore_incremental(
             "merge_insert_ignore_occ — the pointer-flip commit would race "
             "CAS writers and is ignored by OCC resolution"
         )
-    cur_name = current_manifest(table_dir)
-    if cur_name is None:
-        delta = new.distinct()
-        live: list[str] = []
-        next_id = 1
-    else:
-        delta = insert_ignore_delta(read_manifest_table(spark, table_dir), new)
-        live = _manifest_dirs(table_dir, cur_name)
-        next_id = int(cur_name.split("-")[1].split(".")[0]) + 1
-    delta_name = f"delta-{next_id:06d}"
-    delta.write.mode("overwrite").parquet(str(table_dir / delta_name))
-    # an empty delta (fully-contained batch) publishes nothing: drop the
-    # empty dir and keep the current manifest — idempotency without a
-    # manifest chain that grows on retries. The emptiness probe reads
-    # the WRITTEN parquet (one footer), not the plan (no recompute).
-    if cur_name is not None and spark.read.parquet(
-        str(table_dir / delta_name)
-    ).limit(1).count() == 0:
-        import shutil
+    return _merge_manifest(spark, table_dir, new, occ=False, attempts=1, cas=None)
 
-        shutil.rmtree(table_dir / delta_name, ignore_errors=True)
-        return cur_name
-    manifest_name = f"manifest-{next_id:06d}.json"
-    (table_dir / manifest_name).write_text(json.dumps({"dirs": [*live, delta_name]}))
-    ptr = _manifest_pointer(table_dir)
-    tmp = ptr.with_name(f".{_MANIFEST_POINTER}.{os.getpid()}.tmp")
-    tmp.write_text(manifest_name)
-    tmp.replace(ptr)
-    return manifest_name
+
+def merge_insert_ignore_occ(
+    spark: SparkSession,
+    table_dir: str | Path,
+    new: DataFrame,
+    *,
+    max_retries: int = 3,
+    cas: CasBackend | None = None,
+) -> str:
+    """op-insert-ignore MERGE safe under CONCURRENT writers: the
+    manifest merge with a compare-and-swap commit. Each attempt reads
+    the current table, writes ``new ∖ current`` under a writer-unique
+    directory name and tries to claim the next manifest version; a lost
+    race recomputes against the winner's table. Raises
+    :class:`ManifestConflictError` after ``max_retries`` lost races.
+
+    Idempotency and the scale contract are those of
+    :func:`merge_insert_ignore_incremental`; concurrency costs only the
+    recompute on actual conflicts, which is the Delta/Iceberg trade."""
+    table_dir = Path(table_dir)
+    table_dir.mkdir(parents=True, exist_ok=True)
+    marker = table_dir / _OCC_MARKER
+    if not marker.exists():
+        if _manifest_pointer(table_dir).exists():
+            # adopting OCC on a pointer table would switch resolution to
+            # max-valid-manifest, which can resurrect a crash-orphan
+            # COMPLETE manifest the pointer protocol considers garbage.
+            # Migration must be explicit: checkpoint the pointer table,
+            # copy the base into a fresh OCC dir, or vacuum first.
+            raise ValueError(
+                f"{table_dir} is a pointer table (_CURRENT_MANIFEST): "
+                "migrate explicitly before using merge_insert_ignore_occ"
+            )
+        marker.write_text("")
+    return _merge_manifest(
+        spark, table_dir, new, occ=True, attempts=max_retries, cas=cas
+    )
 
 
 def checkpoint(
@@ -339,54 +522,21 @@ def checkpoint(
     compact_small_files; the old dirs become garbage for
     :func:`vacuum_manifest`.
 
-    ``zorder_by`` (VERDICT r13 #7): lay the compacted base out in
-    Z-order on the given 2-3 columns instead of plain coalesce —
-    Delta's ``OPTIMIZE ... ZORDER BY`` as one maintenance action
-    (operators/scale.py:write_zordered_auto — sampled range-id
-    bucketing, so string/date keys work). Costs one range exchange
-    where plain compaction is shuffle-free; content identity is
-    unchanged (the manifest/CAS publish protocol is identical)."""
+    ``zorder_by`` lays the base out in Z-order on the given 2-3 columns
+    instead — Delta's ``OPTIMIZE ... ZORDER BY`` as one maintenance
+    action (operators/scale.py:write_zordered_auto, so string and date
+    keys work) at the cost of one range exchange. Either way the rows
+    are unchanged and the commit is the merge's. On an OCC table a
+    concurrent merge claiming the same version raises
+    :class:`ManifestConflictError`; re-run against the new current."""
     table_dir = Path(table_dir)
     cur_name = current_manifest(table_dir)
     if cur_name is None:
         raise ValueError(f"empty manifest table: {table_dir}")
-    next_id = int(cur_name.split("-")[1].split(".")[0]) + 1
-    occ = _is_occ_table(table_dir)
-    # OCC tables: writer-unique base name + CAS commit (a concurrent
-    # merge claiming the same version surfaces as ManifestConflictError
-    # — re-run the maintenance action against the new current)
-    base_name = (
-        f"base-{next_id:06d}-{os.getpid()}{os.urandom(3).hex()}"
-        if occ
-        else f"base-{next_id:06d}"
-    )
-    df = read_manifest_table(spark, table_dir)
-    if zorder_by:
-        from k8e_fetch_spark.operators.scale import write_zordered_auto
-
-        write_zordered_auto(df, str(table_dir / base_name), zorder_by, n_files=n_files)
-    else:
-        df.coalesce(n_files).write.mode("overwrite").parquet(str(table_dir / base_name))
-    import json
-
-    manifest_name = f"manifest-{next_id:06d}.json"
-    if occ:
-        try:
-            _commit_manifest_cas(
-                table_dir, manifest_name, json.dumps({"dirs": [base_name]}), cas=cas
-            )
-        except ManifestConflictError:
-            import shutil
-
-            shutil.rmtree(table_dir / base_name, ignore_errors=True)
-            raise
-        return manifest_name
-    (table_dir / manifest_name).write_text(json.dumps({"dirs": [base_name]}))
-    ptr = _manifest_pointer(table_dir)
-    tmp = ptr.with_name(f".{_MANIFEST_POINTER}.{os.getpid()}.tmp")
-    tmp.write_text(manifest_name)
-    tmp.replace(ptr)
-    return manifest_name
+    version, occ = _version(cur_name) + 1, _is_occ_table(table_dir)
+    base_name = _data_dir_name("base", version, occ)
+    _rewrite(read_manifest_table(spark, table_dir), table_dir / base_name, n_files, zorder_by)
+    return _commit_manifest(table_dir, version, [base_name], occ, cas)
 
 
 def vacuum_manifest(
@@ -394,54 +544,30 @@ def vacuum_manifest(
 ) -> list[str]:
     """Remove data directories and manifests not reachable from the
     kept manifest set: the LIVE manifest plus its ``keep - 1``
-    predecessors (time travel on the cheap — the same window semantics
-    as the snapshot :func:`vacuum`). Crash orphans (a delta/base whose
-    writer died before the pointer flip, or a torn HIGHER-numbered
-    manifest) are unreachable garbage by construction — protection
-    flows from the pointer, never from lexical order, so an orphan
-    numbered above live is never protected.
+    predecessors (the window semantics of the snapshot :func:`vacuum`).
+    Crash orphans (a delta/base whose writer died before the commit, or
+    a torn higher-numbered manifest) are unreachable by construction.
 
-    ``retain_seconds`` (ADVICE r13): on an OCC table — advertised for
-    CONCURRENT writers — an unreferenced delta dir is not necessarily
-    garbage: it may be a concurrent merge's fully-written delta whose
-    CAS commit has not landed yet, and a manifest above the live one
-    may be a commit that won the race after this vacuum computed its
-    keep set. Deleting either turns a committed transaction into an
-    unreadable table (corruption, not garbage collection). So OCC
-    vacuums only remove candidates whose mtime is older than the
-    retention window — Delta Lake's VACUUM retention, same reasoning —
-    defaulting to :data:`OCC_VACUUM_RETAIN_SECONDS`. Pass
-    ``retain_seconds=0.0`` only under exclusive access (no concurrent
-    writers), e.g. a maintenance window. Pointer tables are
-    single-writer by protocol and default to 0 (unchanged behavior)."""
-    import shutil
-    import time
-
+    ``retain_seconds``: on an OCC table an unreferenced delta dir may be
+    a concurrent merge's fully written delta whose CAS has not landed
+    yet, and a manifest above the live one may be a commit that won
+    after this vacuum computed its keep set. Deleting either turns a
+    committed transaction into an unreadable table. So OCC vacuums only
+    remove candidates whose mtime is older than the retention window —
+    Delta Lake's VACUUM retention — defaulting to
+    :data:`OCC_VACUUM_RETAIN_SECONDS`. Pass ``retain_seconds=0.0`` only
+    under exclusive access, e.g. a maintenance window. Pointer tables
+    are single-writer and default to 0."""
     table_dir = Path(table_dir)
     if retain_seconds is None:
         retain_seconds = OCC_VACUUM_RETAIN_SECONDS if _is_occ_table(table_dir) else 0.0
     cutoff = time.time() - retain_seconds
-    live_manifest = current_manifest(table_dir)
-    manifests = sorted(
-        p.name
-        for p in table_dir.iterdir()
-        if p.is_file() and p.name.startswith("manifest-")
-    )
-    if live_manifest is not None and live_manifest in manifests:
-        upto = manifests.index(live_manifest)
-        keep_manifests = set(manifests[max(0, upto - keep + 1) : upto + 1])
-        keep_manifests.add(live_manifest)
-    else:
-        # No pointer, OR a pointer naming a manifest that is missing on
-        # disk: conservatively keep the lexically latest ``keep``
-        # manifests and their dirs — the same fallback the snapshot
-        # vacuum uses. A stale/corrupt pointer must degrade to
-        # readable garbage, never to deleting every delta/base dir
-        # (ADVICE r12: the old dangling-pointer branch kept NOTHING).
-        keep_manifests = set(manifests[-keep:])
+    manifests = [p.name for p in _manifest_files(table_dir)]
+    keep_manifests = _keep_window(manifests, current_manifest(table_dir), keep)
     keep_dirs: set[str] = set()
     for m in keep_manifests:
         keep_dirs.update(_manifest_dirs(table_dir, m))
+
     def _retained(p: Path) -> bool:
         # fresh candidates stay inside the retention window (in-flight
         # concurrent deltas / just-won commits); stat races with a
@@ -460,8 +586,7 @@ def vacuum_manifest(
                 shutil.rmtree(p, ignore_errors=True)
                 removed.append(p.name)
         elif (
-            p.is_file()
-            and p.name.startswith("manifest-")
+            p.name in manifests
             and p.name not in keep_manifests
             and not _retained(p)
         ):
@@ -471,156 +596,69 @@ def vacuum_manifest(
 
 
 # ---------------------------------------------------------------------------
-# OCC manifest tables (r13): optimistic concurrency for MULTIPLE writers.
-# The pointer protocol above is single-writer by design (the reference's
-# serialized runs). Under concurrent writers it has two failure modes:
-# two merges that read the same base compute the same next_id, so (a)
-# the second delta write CLOBBERS the first's data directory, and (b)
-# last-pointer-wins silently drops a committed merge. The fix is the
-# protocol Delta Lake uses on S3 and Iceberg uses against its catalog:
-# the VERSION NUMBER is the compare-and-swap token. A commit claims
-# `manifest-{N+1}` atomically through the CAS seam (plans/cas.py):
-# LinkCas (default) hard-links a fully-written temp file — link fails
-# with FileExistsError if the version is taken; ConditionalPutCas is
-# the object-store form of the same claim (If-None-Match PUT, lost
-# race -> 409/412); a catalog row CAS slots in as another backend.
-# The loser recomputes its delta
-# against the NEW current table and retries — its abandoned delta dir
-# is unreachable garbage for vacuum_manifest, never corruption. Delta
-# dirs carry a per-writer suffix so concurrent writers can never write
-# the same data path. OCC tables are marked with an `_OCC` file; their
-# current state is the HIGHEST parseable manifest (manifests are
-# complete-by-construction under link-CAS), so no pointer file exists
-# to race or regress.
+# Format-level entry points (what the pipeline calls)
 # ---------------------------------------------------------------------------
 
-_OCC_MARKER = "_OCC"
 
-# Default vacuum retention for OCC tables (see vacuum_manifest): an
-# unreferenced dir younger than this is presumed to be a concurrent
-# writer's in-flight delta, not garbage. Delta Lake defaults to 7 days;
-# one day is generous for a merge attempt's write-to-CAS gap while
-# keeping local test garbage collectable by backdating mtimes.
-OCC_VACUUM_RETAIN_SECONDS = 24 * 3600.0
-
-
-
-def _is_occ_table(table_dir: Path) -> bool:
-    return (Path(table_dir) / _OCC_MARKER).exists()
-
-
-def _max_valid_manifest(table_dir: Path) -> str | None:
-    """Highest-numbered manifest that parses (the OCC notion of
-    'current'). Under link-CAS every manifest is complete, so the
-    parse guard only matters for hand-damaged tables."""
-    import json
-
-    for p in sorted(
-        (
-            q
-            for q in Path(table_dir).iterdir()
-            if q.is_file() and q.name.startswith("manifest-")
-        ),
-        key=lambda q: q.name,
-        reverse=True,
-    ):
-        try:
-            json.loads(p.read_text())["dirs"]
-            return p.name
-        except Exception:
-            continue
-    return None
-
-
-def _commit_manifest_cas(
-    table_dir: Path,
-    manifest_name: str,
-    payload: str,
-    cas: CasBackend | None = None,
-) -> None:
-    """Atomically claim ``manifest_name`` through the CAS seam
-    (plans/cas.py). Default :class:`LinkCas` is the hard-link claim
-    the OCC tables shipped with; :class:`ConditionalPutCas` commits
-    through an object store's ``If-None-Match`` PUT. Either way the
-    claim wins exactly once — a taken version raises
-    :class:`ManifestConflictError` and the merge recomputes."""
-    (cas or DEFAULT_CAS).claim(Path(table_dir), manifest_name, payload)
-
-
-def merge_insert_ignore_occ(
+def merge_table(
     spark: SparkSession,
     table_dir: str | Path,
     new: DataFrame,
-    *,
-    max_retries: int = 3,
+    table_format: str,
     cas: CasBackend | None = None,
-) -> str:
-    """op-insert-ignore MERGE safe under CONCURRENT writers: the
-    incremental manifest merge with a compare-and-swap commit. Each
-    attempt reads the current table, computes ``new ∖ current`` (the
-    null-safe ``insert_ignore_delta``), writes the delta under a
-    writer-unique directory name, and tries to claim the next manifest
-    version; a lost race recomputes against the winner's table and
-    retries (the recompute is required for correctness — the winner may
-    have inserted some of this batch's rows). Raises
-    :class:`ManifestConflictError` after ``max_retries`` lost races.
+) -> DataFrame:
+    """INSERT OR IGNORE ``new`` into a snapshot, manifest or OCC table
+    and return the published table. Flat parquet tables merge in
+    plans/pipeline.py:merge_parquet."""
+    if table_format == "snapshot":
+        merge_insert_ignore(spark, table_dir, new)
+        return read_table(spark, table_dir)
+    if table_format == "occ":
+        merge_insert_ignore_occ(spark, table_dir, new, cas=cas)
+    elif table_format == "manifest":
+        merge_insert_ignore_incremental(spark, table_dir, new)
+    else:
+        raise ValueError(f"merge_table takes snapshot|manifest|occ, got {table_format!r}")
+    return read_manifest_table(spark, table_dir)
 
-    Idempotency is unchanged from the single-writer form: a contained
-    batch produces an empty delta, publishes nothing and returns the
-    current name. Scale contract is unchanged too — O(delta) writes,
-    one keyed shuffle per attempt; the concurrency cost is only the
-    recompute on actual conflicts, which is exactly the Delta/Iceberg
-    trade."""
-    import json
-    import shutil
 
+def relayout(
+    spark: SparkSession,
+    table_dir: str | Path,
+    table_format: str,
+    target_bytes: int | None = None,
+    zorder_by: Sequence[str] | None = None,
+    cas: CasBackend | None = None,
+) -> DataFrame | None:
+    """Rewrite a table into files of about ``target_bytes`` (compaction)
+    and/or in Z-order on ``zorder_by``, publish it the format's way and
+    return it; None when there is nothing to do. Without ``target_bytes``
+    the Z-order files are sized by a 128 MB target.
+
+    - parquet: rewrite into the temp sibling and swap;
+    - snapshot: a Z-ordered new snapshot and a pointer flip. Compaction
+      alone is a no-op, because every merge already rewrites the table;
+    - manifest / occ: :func:`checkpoint` into one base, then
+      :func:`vacuum_manifest` under the format's default retention.
+    """
+    if not zorder_by and (target_bytes is None or table_format == "snapshot"):
+        return None
     table_dir = Path(table_dir)
-    table_dir.mkdir(parents=True, exist_ok=True)
-    marker = table_dir / _OCC_MARKER
-    if not marker.exists():
-        if _manifest_pointer(table_dir).exists():
-            # adopting OCC on a pointer table would switch resolution to
-            # max-valid-manifest, which can resurrect a crash-orphan
-            # COMPLETE manifest the pointer protocol considers garbage.
-            # Migration must be explicit: checkpoint the pointer table,
-            # copy the base into a fresh OCC dir, or vacuum first.
-            raise ValueError(
-                f"{table_dir} is a pointer table (_CURRENT_MANIFEST): "
-                "migrate explicitly before using merge_insert_ignore_occ"
-            )
-        marker.write_text("")
-    last_err: Exception | None = None
-    for _ in range(max_retries):
-        cur_name = current_manifest(table_dir)
-        if cur_name is None:
-            delta = new.distinct()
-            live: list[str] = []
-            next_id = 1
-        else:
-            delta = insert_ignore_delta(read_manifest_table(spark, table_dir), new)
-            live = _manifest_dirs(table_dir, cur_name)
-            next_id = int(cur_name.split("-")[1].split(".")[0]) + 1
-        delta_name = f"delta-{next_id:06d}-{os.getpid()}{os.urandom(3).hex()}"
-        delta.write.mode("overwrite").parquet(str(table_dir / delta_name))
-        if cur_name is not None and spark.read.parquet(
-            str(table_dir / delta_name)
-        ).limit(1).count() == 0:
-            shutil.rmtree(table_dir / delta_name, ignore_errors=True)
-            return cur_name
-        manifest_name = f"manifest-{next_id:06d}.json"
-        try:
-            _commit_manifest_cas(
-                table_dir,
-                manifest_name,
-                json.dumps({"dirs": [*live, delta_name]}),
-                cas=cas,
-            )
-            return manifest_name
-        except ManifestConflictError as e:
-            # lost the race: our delta may be stale against the winner's
-            # table — drop it (unreachable garbage anyway) and recompute
-            shutil.rmtree(table_dir / delta_name, ignore_errors=True)
-            last_err = e
-    raise ManifestConflictError(
-        f"gave up after {max_retries} lost commit races in {table_dir}"
-    ) from last_err
+    if table_format == "parquet":
+        live = [table_dir]
+    elif table_format == "snapshot":
+        live = [table_dir / current_snapshot(table_dir)]
+    else:
+        live = [table_dir / d for d in _manifest_dirs(table_dir, current_manifest(table_dir))]
+    live_bytes = sum(f.stat().st_size for d in live for f in d.rglob("*.parquet"))
+    n_files = max(1, math.ceil(live_bytes / (target_bytes or 128 << 20)))
+    if table_format == "parquet":
+        df = spark.read.parquet(str(table_dir))
+        _swap(table_dir, lambda tmp: _rewrite(df, tmp, n_files, zorder_by))
+        return spark.read.parquet(str(table_dir))
+    if table_format == "snapshot":
+        rewrite_snapshot_zordered(spark, table_dir, zorder_by, n_files=n_files)
+        return read_table(spark, table_dir)
+    checkpoint(spark, table_dir, n_files=n_files, zorder_by=zorder_by, cas=cas)
+    vacuum_manifest(table_dir)
+    return read_manifest_table(spark, table_dir)

@@ -275,7 +275,7 @@ def compress_insert_ignore_tx(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap.merge_insert_ignore(spark, table_dir, batch([0, 1]))
     live = snap.merge_insert_ignore(spark, table_dir, batch([1, 2]))
     # torn write: a complete-looking snapshot directory whose writer
-    # died before _publish — the pointer still names `live`
+    # died before the pointer flip — the pointer still names `live`
     poison = spark.createDataFrame(
         [(-i, "TORN") for i in range(1, 6)], "cust_key bigint, status string"
     )

@@ -20,6 +20,27 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+#: Runtime-settable confs: ``get_spark`` builds with them and
+#: ``tune_session`` applies them to a session it did not build.
+#:
+#: Invariant: ``parallelismFirst`` is true (the Spark default), so AQE
+#: sizes coalesced partitions by min(advisory, max(shuffle bytes /
+#: default parallelism, min size)) and a shuffle that is small in bytes
+#: but CPU-dense keeps its parallelism. With false, the 64 MB advisory
+#: collapsed the LSH candidate-pair exchange to one partition and the
+#: cosine verify behind it ran serially (20x-replication A/B, warm
+#: best-of-3: sim_cosine_lsh 10.2 -> 3.95 s, dedup_substring_spans
+#: 9.1 -> 2.77 s). At 100 TB, shuffle bytes / parallelism >= 64 MB, so
+#: both settings give the advisory size there.
+RUNTIME_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+}
+
 
 def get_spark(
     app_name: str = "k8e-fetch-spark",
@@ -33,34 +54,12 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # r19: parallelismFirst back to TRUE (the Spark default). The
-        # r12-era A/B that set it false (q1 0.78->0.63 s at sf0.1)
-        # measured bench-SF rows under ALWAYS-ON AQE — a regime that no
-        # longer exists: AQE has been input-size-gated off below 1 GB
-        # since, so bench SFs never coalesce at all and that win's
-        # conditions are gone. What false DOES still do is serialize
-        # compute-dense compact-byte exchanges on AQE-on (>1 GB) runs:
-        # the 64 MB byte advisory coalesced the LSH candidate-pair
-        # (id,id) exchange to ONE partition and the Arrow cosine verify
-        # behind it ran serially (r19 event-log stage timeline: a 4.8 s
-        # 1-task stage). A/B at 20x replication, warm best-of-3, AQE on:
-        # sim_cosine_lsh 10.2 -> 3.95 s, dedup_substring_spans 9.1 ->
-        # 2.77 s. Scale-honest: with true, AQE's calculated target is
-        # min(advisory, max(totalBytes/defaultParallelism, minSize)) —
-        # for 100 TB shuffles totalBytes/parallelism >= 64 MB, so the
-        # advisory rule is IDENTICAL at scale; true only floors
-        # parallelism where shuffles are small in bytes but possibly
-        # CPU-dense (exactly the measured pathology).
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    for k, v in RUNTIME_CONF.items():
+        builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
@@ -114,18 +113,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
     The verification driver hands us its own SparkSession; static conf
     (master, memory) is fixed, but these are safe to set at runtime.
     """
-    for k, v in {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        # true (Spark default) — see get_spark: byte-advisory coalescing
-        # with false serialized compute-dense compact-byte exchanges
-        # (r19 A/B at 20x: cosine-LSH 10.2 -> 3.95 s); identical to
-        # false at 100 TB widths where totalBytes/parallelism >= 64 MB
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-    }.items():
+    for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:  # pragma: no cover - conf may be static in some harnesses

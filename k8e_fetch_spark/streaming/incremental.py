@@ -18,11 +18,11 @@ property the reference's unique index provides.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from k8e_fetch_spark.operators.dedup import insert_ignore
+from k8e_fetch_spark.plans.pipeline import merge_parquet
+from k8e_fetch_spark.streaming.windows import drain_available_now
 
 
 class IncrementalComponent:
@@ -38,14 +38,8 @@ class IncrementalComponent:
         return None
 
     def merge_batch(self, batch: DataFrame) -> None:
-        """One INSERT OR IGNORE application (see operators/dedup.py)."""
-        existing = self.read()
-        merged = batch.distinct() if existing is None else insert_ignore(existing, batch)
-        tmp = self.path + ".__tmp__"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.path):
-            shutil.rmtree(self.path)
-        os.replace(tmp, self.path)
+        """One INSERT OR IGNORE application: the pipeline's parquet merge."""
+        merge_parquet(self.spark, self.path, batch)
 
 
 def run_incremental_compress(
@@ -67,15 +61,8 @@ def run_incremental_compress(
     def handle(batch: DataFrame, _batch_id: int) -> None:
         component.merge_batch(batch.select(*columns))
 
-    q = (
-        source.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        source.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint_dir),
+        timeout_sec,
+        "incremental compress did not drain in time",
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError("incremental compress did not drain in time")
-    finally:
-        if q.isActive:
-            q.stop()

@@ -30,6 +30,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
@@ -198,6 +199,22 @@ def clicks_to_purchases(events: DataFrame, horizon: str = "1 hour", watermark: s
     )
 
 
+def drain_available_now(
+    writer: DataStreamWriter, timeout_sec: int, timeout_message: str
+) -> None:
+    """Start the configured ``writer`` with an availableNow trigger and
+    block until it has processed everything currently discoverable.
+    Raises TimeoutError(``timeout_message``) after ``timeout_sec``; the
+    query is stopped either way."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(timeout_sec):
+            raise TimeoutError(timeout_message)
+    finally:
+        if q.isActive:
+            q.stop()
+
+
 def run_available_now_to_dir(
     df: DataFrame,
     checkpoint_dir: str,
@@ -234,19 +251,12 @@ def run_available_now_to_dir(
         else:
             batch_df.write.mode("append").parquet(sink_dir)
 
-    q = (
+    writer = (
         df.writeStream.foreachBatch(write_batch)
         .outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError("stream did not drain in time")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain_available_now(writer, timeout_sec, "stream did not drain in time")
     spark = df.sparkSession
     try:
         return spark.read.parquet(sink_dir)
@@ -275,20 +285,13 @@ def run_available_now(
     — the batch-backfill mode of a production stream (and the only
     honest way to test one)."""
     name = "s_" + uuid.uuid4().hex[:12]
-    q = (
+    writer = (
         df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError("stream did not drain in time")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain_available_now(writer, timeout_sec, "stream did not drain in time")
     return df.sparkSession.table(name)
 
 
@@ -486,19 +489,12 @@ def run_scd2_cdc_stream(
                         os.path.join(state_dir, name), ignore_errors=True
                     )
 
-    q = (
+    writer = (
         updates.writeStream.foreachBatch(apply_batch)
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError("SCD2 CDC stream did not drain in time")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain_available_now(writer, timeout_sec, "SCD2 CDC stream did not drain in time")
     return spark.read.parquet(cursor["path"])
 
 
@@ -620,19 +616,12 @@ def run_minhash_dedup_stream(
         merge_insert_ignore_incremental(spark, store_dir, rel_b)
         vacuum_manifest(store_dir, keep=retain_manifests)
 
-    q = (
+    writer = (
         new_docs.writeStream.foreachBatch(flag_and_absorb)
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError("minhash dedup stream did not drain in time")
-    finally:
-        if q.isActive:
-            q.stop()
+    drain_available_now(writer, timeout_sec, "minhash dedup stream did not drain in time")
     # explicit schema: a batch with zero flagged pairs writes only
     # metadata; enumerated dirs (not a glob — globbing a pattern with
     # no match WARNs through the FileStreamSink probe and then fails)

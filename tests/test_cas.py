@@ -40,7 +40,8 @@ def _make_store_handler(responses: list[int]):
     """A strict conditional-PUT handler rooted at the filesystem: the
     request path IS the absolute object path. Claims go through the
     same link-CAS internally so the double is race-safe even under the
-    threading server."""
+    threading server. Each status is logged before it is sent, so a
+    client that reads ``responses`` right after its request sees it."""
 
     link = LinkCas()
 
@@ -52,9 +53,9 @@ def _make_store_handler(responses: list[int]):
             if self.headers.get("If-None-Match") != "*":
                 # the whole point is create-if-absent; an unconditional
                 # PUT from commit code is a protocol bug — fail loudly
+                responses.append(400)
                 self.send_response(400)
                 self.end_headers()
-                responses.append(400)
                 return
             raw = self.rfile.read(int(self.headers.get("Content-Length", 0)))
             obj = Path("/" + urllib.parse.unquote(self.path).lstrip("/"))
@@ -63,13 +64,13 @@ def _make_store_handler(responses: list[int]):
                 link.claim(obj.parent, obj.name, raw.decode("utf-8"))
             except ManifestConflictError:
                 # S3 answers a failed If-None-Match with 412
+                responses.append(412)
                 self.send_response(412)
                 self.end_headers()
-                responses.append(412)
                 return
+            responses.append(201)
             self.send_response(201)
             self.end_headers()
-            responses.append(201)
 
     return Handler
 

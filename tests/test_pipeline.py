@@ -149,6 +149,22 @@ def test_stage_memoization_skip_load(spark, tmp_path):
     counts_again = {k: v.count() for k, v in again.items()}
     assert counts_again == counts_first
 
+    # a write that died before its swap leaves the table's temp sibling;
+    # the rerun must not read it as a landed table (the VR include
+    # pattern matches its name)
+    from pyspark.sql import functions as F
+
+    landed = spark.read.parquet(f"{wh}/vr_snapshot_20240514")
+    landed.limit(1).select(
+        [F.lit("junk").cast(f.dataType).alias(f.name) for f in landed.schema]
+    ).write.parquet(f"{wh}/vr_snapshot_20240514.__tmp__")
+    crashed = pipe2.run(
+        manifest_path="/nonexistent/manifest.json",
+        data_dir="/nonexistent",
+        skip=frozenset({"load"}),
+    )
+    assert {k: v.count() for k, v in crashed.items()} == counts_first
+
 
 @pytest.mark.parametrize("listing", ['{"Versions": []}', "{}"], ids=["empty", "no_versions"])
 def test_empty_listing_loads_nothing(spark, tmp_path, listing):

@@ -460,6 +460,23 @@ def test_manifest_time_travel_reads_inside_keep_window(spark, tmp_path):
     ]
 
 
+def test_occ_skips_unparseable_manifests(spark, tmp_path):
+    """A manifest that does not parse — truncated, or not a JSON
+    object — is not a version: OCC resolution falls back to the highest
+    one that does, and manifest_versions leaves it out."""
+    from k8e_fetch_spark.plans import snapshots as snap
+
+    t = str(tmp_path / "occ")
+    snap.merge_insert_ignore_occ(
+        spark, t, spark.createDataFrame([(1, "a")], "k int, v string")
+    )
+    Path(t, "manifest-000098.json").write_text("[]")
+    Path(t, "manifest-000099.json").write_text('{"dirs": ["del')
+    assert snap.current_manifest(t) == "manifest-000001.json"
+    assert snap.manifest_versions(t) == [1]
+    assert _occ_rows(snap.read_manifest_table(spark, t)) == [(1, "a")]
+
+
 def test_occ_real_two_process_race(tmp_path):
     """The OCC claim proven with REAL concurrency: two separate driver
     processes (own JVMs) merge overlapping batches into the same table
