@@ -15,6 +15,8 @@ from k8e_fetch_spark.sources import ingest
 from k8e_fetch_spark.resources import fixtures_root
 
 FIXTURES = fixtures_root()
+# bin/quotequote:3-4, the data-row quote repair, as a committed sed script
+QUOTEQUOTE_SED = Path(__file__).parent / "fixtures" / "quotequote_data_rows.sed"
 
 
 def _all_string(df):
@@ -139,8 +141,10 @@ def test_ragged_rows_permissive(spark, tmp_path):
 
 def test_transcode_matches_iconv(spark, tmp_path):
     """The reference pipes through ``iconv -f LATIN1/UTF-16 -t UTF-8``
-    (fetcher.bash:105-110). Ground truth: our decoded rows must equal
-    what iconv itself produces from the same bytes."""
+    (fetcher.bash:105-110), then through ``bin/quotequote``. Ground truth:
+    our decoded rows must equal what iconv itself produces from the same
+    bytes; for the VR fixture, after ``sed -f`` runs the committed
+    data-row rules of quotequote (``fixtures/quotequote_data_rows.sed``)."""
     import subprocess
 
     for name, enc_spark, enc_iconv in [
@@ -167,7 +171,7 @@ def test_transcode_matches_iconv(spark, tmp_path):
         if name.startswith("VR_"):
             want_data = [
                 subprocess.run(
-                    ["bash", "/root/reference/bin/quotequote"],
+                    ["sed", "-f", str(QUOTEQUOTE_SED)],
                     input="HDR\n" + ln + "\n",
                     capture_output=True,
                     text=True,

@@ -18,8 +18,10 @@ from k8e_fetch_spark.operators.repair import quote_repair
 
 
 def sed_reference(line: str) -> str:
-    """Independent re-implementation of /root/reference/bin/quotequote:3-4
-    (global substitutions, applied in script order)."""
+    """Independent re-implementation of bin/quotequote:3-4 (global
+    substitutions, applied in script order). The committed sed script
+    ``fixtures/quotequote_data_rows.sed`` is the ground truth for the
+    repair; ``test_quote_repair_matches_actual_sed_binary`` runs it."""
     line = re.sub(r' ("[^",]*)"', r' "\1""', line)
     line = re.sub(r'([A-Z])"([A-Z])', r"\1'\2", line)
     return line
@@ -80,15 +82,18 @@ def _spark_session_holder(spark):
     return spark
 
 
-import os
+import shutil
 import subprocess
+from pathlib import Path
+
+# bin/quotequote:3-4, the data-row quote repair, as a committed sed script
+QUOTEQUOTE_SED = Path(__file__).parent / "fixtures" / "quotequote_data_rows.sed"
 
 
-@pytest.mark.skipif(
-    not os.path.exists("/root/reference/bin/quotequote"), reason="reference not present"
-)
+@pytest.mark.skipif(shutil.which("sed") is None, reason="sed not installed")
 def test_quote_repair_matches_actual_sed_binary(spark_session_holder):
-    """Ground truth: run the reference's actual sed script over canonical
+    """Ground truth: run the quotequote data-row rules through sed itself
+    (``sed -f fixtures/quotequote_data_rows.sed``) over canonical
     pathological lines and require byte-identical output from our
     regexp_replace chain — closes the two-sided-wrong loophole where the
     Spark op and the Python reimplementation share a mistranslation."""
@@ -103,11 +108,11 @@ def test_quote_repair_matches_actual_sed_binary(spark_session_holder):
         '""',
         'trailing space "q" ',
     ]
-    # quotequote also normalizes the header (row 1 only): prepend a
-    # sacrificial header line and drop it, so every probe line gets the
-    # data-row treatment
+    # the full quotequote also normalizes the header (row 1 only): a
+    # sacrificial header line, dropped after, keeps every probe line a
+    # data row as it is in the reference
     sed_data = subprocess.run(
-        ["bash", "/root/reference/bin/quotequote"],
+        ["sed", "-f", str(QUOTEQUOTE_SED)],
         input="HDR\n" + "\n".join(lines) + "\n",
         capture_output=True,
         text=True,
