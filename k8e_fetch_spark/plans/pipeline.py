@@ -202,8 +202,7 @@ class Pipeline:
         else:  # memoized: re-read the landed tables from the warehouse
             tables = {
                 n: self.spark.read.parquet(os.path.join(self.warehouse, n))
-                for n in os.listdir(self.warehouse)
-                if snap.is_flat_table(os.path.join(self.warehouse, n))
+                for n in snap.flat_tables(self.warehouse)
             }
         if "compress" in skip:
             return tables
@@ -223,7 +222,7 @@ def merge_parquet(spark: SparkSession, path: str, batch: DataFrame) -> DataFrame
     """op-insert-ignore into the flat parquet table at ``path``: CREATE
     TABLE IF NOT EXISTS … LIMIT 0 (op-schema-clone), INSERT OR IGNORE,
     and the result replaces the table. Returns the re-read table."""
-    existing = spark.read.parquet(path) if os.path.exists(path) else batch.limit(0)
+    existing = spark.read.parquet(path) if snap.is_flat_table(path) else batch.limit(0)
     return snap.write_flat(insert_ignore(existing, batch), path)
 
 

@@ -9,8 +9,9 @@ plain parquet, with no table-format library, in four layouts
 (:data:`TABLE_FORMATS`):
 
 - ``parquet``: a flat directory. Every rewrite lands in a temp sibling
-  (``<table>.__tmp__``) that then replaces the table
-  (:func:`write_flat`).
+  (``<table>.__tmp__``) that then replaces the table (:func:`write_flat`):
+  the live table is renamed aside (``<table>.__old__``), the temp
+  renamed in, and the aside copy deleted.
 - ``snapshot``: every merge writes a complete ``snap-<n>/`` beside the
   live one and flips the ``_CURRENT`` pointer. O(table) per merge —
   the right trade for dimension tables, which are orders of magnitude
@@ -35,8 +36,9 @@ Invariants, for every format:
   is replaced only after its new contents are completely written;
 - a crash leaves unreferenced directories or manifests — garbage for
   :func:`vacuum` / :func:`vacuum_manifest`, never a torn table — and a
-  flat table's temp sibling is never read as a table
-  (:func:`is_flat_table`);
+  flat table's temp and aside siblings are never read as tables
+  (:func:`is_flat_table`); a flat table a crashed swap left only aside
+  is renamed back by the next swap or :func:`is_flat_table` call;
 - merging a batch the table already holds adds no rows, and on
   manifest and OCC tables publishes nothing.
 
@@ -67,9 +69,11 @@ from k8e_fetch_spark.plans.cas import (  # noqa: F401  (re-export: public API)
 
 TABLE_FORMATS = ("parquet", "snapshot", "manifest", "occ")
 
-# suffix of the temp sibling a flat table's rewrite lands in before it
-# replaces the table
+# suffixes of the temp sibling a flat table's rewrite lands in before it
+# replaces the table, and of the sibling the live table is renamed to
+# while it is replaced
 _SWAP_SUFFIX = ".__tmp__"
+_ASIDE_SUFFIX = ".__old__"
 
 _POINTER = "_CURRENT"
 _MANIFEST_POINTER = "_CURRENT_MANIFEST"
@@ -135,13 +139,33 @@ def _swap(path: str | Path, write: Callable[[str], None]) -> None:
     """``write`` the table's new contents into its temp sibling, then
     replace the table with it. The new contents may be computed from
     the table itself: Spark reads lazily, so writing in place would
-    race the read."""
+    race the read. The live table is renamed aside, not deleted, until
+    the new one is in place, so a crash at any step leaves a complete
+    table at ``path`` or aside (see :func:`_recover`)."""
     path = str(path)
-    tmp = path + _SWAP_SUFFIX
+    _recover(path)
+    tmp, aside = path + _SWAP_SUFFIX, path + _ASIDE_SUFFIX
     write(tmp)
-    if os.path.exists(path):
-        shutil.rmtree(path)
+    if not os.path.exists(path):
+        os.replace(tmp, path)
+        return
+    os.replace(path, aside)
     os.replace(tmp, path)
+    shutil.rmtree(aside)
+
+
+def _recover(path: str) -> None:
+    """Finish a swap of the flat table ``path`` that crashed: a table
+    found only aside is renamed back (the rewrite is lost, and rerunning
+    it converges), and an aside copy beside a live table — the swap died
+    in or before its delete — is deleted."""
+    aside = path + _ASIDE_SUFFIX
+    if not os.path.exists(aside):
+        return
+    if os.path.exists(path):
+        shutil.rmtree(aside)
+    else:
+        os.replace(aside, path)
 
 
 def write_flat(df: DataFrame, path: str | Path) -> DataFrame:
@@ -154,13 +178,24 @@ def write_flat(df: DataFrame, path: str | Path) -> DataFrame:
 
 
 def is_flat_table(path: str | Path) -> bool:
-    """True for a flat parquet table: neither a swap's temp sibling
-    (what a write that died before its swap leaves) nor a snapshot,
-    manifest or OCC table, which carry a marker file."""
+    """True for an existing flat parquet table: neither a swap's temp or
+    aside sibling nor a snapshot, manifest or OCC table, which carry a
+    marker file. A table a crashed swap left only aside is recovered
+    first."""
     path = Path(path)
-    return not path.name.endswith(_SWAP_SUFFIX) and not any(
+    if path.name.endswith((_SWAP_SUFFIX, _ASIDE_SUFFIX)):
+        return False
+    _recover(str(path))
+    return path.is_dir() and not any(
         (path / m).exists() for m in (_POINTER, _MANIFEST_POINTER, _OCC_MARKER)
     )
+
+
+def flat_tables(warehouse: str | Path) -> list[str]:
+    """Names of the flat parquet tables in ``warehouse``, a table a
+    crashed swap left only aside included (and recovered)."""
+    names = {n.removesuffix(_ASIDE_SUFFIX) for n in os.listdir(warehouse)}
+    return sorted(n for n in names if is_flat_table(os.path.join(warehouse, n)))
 
 
 # ---------------------------------------------------------------------------

@@ -10,13 +10,28 @@ one you would also set on a 1000-executor cluster:
   moves data in columnar batches, not pickled rows.
 - UTC session timezone: deterministic timestamp semantics regardless of
   host zone (matches the DuckDB oracle).
+
+A fresh driver JVM launch maps a cached class archive (JDK dynamic
+AppCDS, JEP 350) when one matches the JVM and the Spark jars, and
+otherwise dumps one as the JVM exits; see :func:`get_spark`.
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
+import logging
 import os
+import shutil
+import subprocess
+from pathlib import Path
+from typing import NamedTuple
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -41,6 +56,12 @@ RUNTIME_CONF = {
     "spark.sql.session.timeZone": "UTC",
 }
 
+_JAVA_OPTS = "spark.driver.extraJavaOptions"
+
+#: How long the exit hook of a dumping launch waits for the JVM to write
+#: its class archive (about 12 s on 4 cores) before giving up on it.
+_DUMP_WAIT_S = 120.0
+
 
 def get_spark(
     app_name: str = "k8e-fetch-spark",
@@ -48,21 +69,197 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """Build (or return the running) local session.
+
+    A call that launches the driver JVM uses the class archive cache
+    (:func:`_plan_launch`): it maps a cached archive of the Spark,
+    Catalyst and Hadoop classes, pre-parsed and pre-verified, instead of
+    loading them from the jars, or dumps one when the JVM exits. A
+    launch that fails with the archive deletes it and launches once
+    more without it. The decision is logged at INFO.
+    """
     cpus = cpus or DEFAULT_CPUS
-    shuffle_partitions = shuffle_partitions or cpus
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    )
-    for k, v in RUNTIME_CONF.items():
-        builder = builder.config(k, v)
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or cpus),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        **RUNTIME_CONF,
+        **(extra_conf or {}),
+    }
+
+    def build(conf: dict[str, str]) -> SparkSession:
+        return (
+            SparkSession.builder.appName(app_name)
+            .master(f"local[{cpus}]")
+            .config(map=conf)
+            .getOrCreate()
+        )
+
+    launch, decision = _plan_launch(conf)
+    if launch is None:
+        log.info("class archive skipped: %s", decision)
+        return build(conf)
+    opts = " ".join(filter(None, (conf.get(_JAVA_OPTS), launch.java_opts)))
+    try:
+        with _spark_conf_dir(launch.conf_dir):
+            spark = build({**conf, _JAVA_OPTS: opts})
+    except Exception as e:
+        if SparkContext._gateway is not None:  # the JVM is up: not the archive's fault
+            raise
+        if launch.part is None:
+            launch.archive.unlink(missing_ok=True)
+        log.warning("class archive rejected (%s): %s; relaunched without it", decision, e)
+        return build(conf)
+    if launch.part is not None:
+        atexit.register(_publish_dump, SparkContext._gateway.proc, launch.part, launch.archive)
+    log.info("class archive %s", decision)
+    return spark
+
+
+@contextlib.contextmanager
+def _spark_conf_dir(path: Path):
+    """Set ``SPARK_CONF_DIR`` for the launch inside the block only."""
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = str(path)
+    try:
+        yield
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+
+
+class _Launch(NamedTuple):
+    """How one fresh JVM launch uses the class archive cache: map
+    ``archive``, or dump to ``part`` (not None) at exit; either way with
+    the empty ``conf_dir`` as ``SPARK_CONF_DIR``."""
+
+    archive: Path
+    part: Path | None
+    conf_dir: Path
+
+    @property
+    def java_opts(self) -> str:
+        # The CRC check turns a damaged archive into a clean refusal (it
+        # costs no measurable launch CPU). cds messages go to stderr,
+        # never into a caller's stdout: warnings such as that refusal
+        # when mapping, errors only when dumping, which warns once per
+        # class it cannot archive (hundreds of lines).
+        if self.part is None:
+            use, level = f"-XX:SharedArchiveFile={self.archive}", "warning"
+        else:
+            use, level = f"-XX:ArchiveClassesAtExit={self.part}", "error"
+        return f"{use} -XX:+VerifySharedSpaces -Xlog:cds*=off:stdout -Xlog:cds*={level}:stderr"
+
+
+def _plan_launch(conf: dict[str, str]) -> tuple[_Launch | None, str]:
+    """Decide how a JVM launch with ``conf`` uses the class archive
+    cache: ``(launch, "used …" | "dumping to …")``, or ``(None, reason)``
+    to launch plainly.
+
+    The cache is ``$XDG_CACHE_HOME/k8e_fetch_spark/`` (default
+    ``~/.cache``). It holds an empty conf dir and one archive, named by
+    a key over what an archive is valid for: the JVM build, the Spark
+    jars and the classpath's conf dir. The JVM refuses to dump when the
+    classpath holds a non-empty directory, and Spark puts the conf dir
+    on it, so a launch uses the cache only when the effective conf dir
+    holds nothing but ``*.template`` files — it then launches with the
+    empty cached one, and a user's config is never hidden — and nothing
+    else adds a directory to the classpath.
+    """
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return None, "a JVM is already running"
+    for var in ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH"):
+        if os.environ.get(var):
+            return None, f"{var} is set"
+    if conf.get("spark.driver.extraClassPath"):
+        return None, "spark.driver.extraClassPath is set"
+    from pyspark.find_spark_home import _find_spark_home
+
+    spark_home = Path(_find_spark_home())
+    user_conf = Path(os.environ.get("SPARK_CONF_DIR") or spark_home / "conf")
+    if user_conf.is_dir() and any(not p.name.endswith(".template") for p in user_conf.iterdir()):
+        return None, f"{user_conf} holds Spark config"
+    cache = Path(os.environ.get("XDG_CACHE_HOME") or Path.home() / ".cache") / "k8e_fetch_spark"
+    conf_dir = cache / "conf"
+    try:
+        conf_dir.mkdir(parents=True, exist_ok=True)
+    except OSError as e:
+        return None, f"cannot create {conf_dir}: {e}"
+    if not os.access(cache, os.W_OK):
+        return None, f"{cache} is not writable"
+    if any(c.isspace() or c in "'\"" for c in str(cache)):
+        return None, f"{cache} would need quoting in {_JAVA_OPTS}"
+    if any(conf_dir.iterdir()):
+        return None, f"{conf_dir} is not empty"
+    key = _cache_key(spark_home, conf_dir)
+    if key is None:
+        return None, "no libjvm.so found for the JVM spark-submit runs"
+    for part in cache.glob("*.jsa.part"):  # <key>.<writer pid>.jsa.part
+        pid = part.name.split(".")[1]
+        if not (pid.isdigit() and _alive(int(pid))):
+            part.unlink(missing_ok=True)
+    archive = cache / f"{key}.jsa"
+    if archive.exists():
+        return _Launch(archive, None, conf_dir), f"used {archive}"
+    part = cache / f"{key}.{os.getpid()}.jsa.part"
+    return _Launch(archive, part, conf_dir), f"dumping to {part}"
+
+
+def _cache_key(spark_home: Path, conf_dir: Path) -> str | None:
+    """Hash of the JVM spark-submit will run (its realpath, and the size
+    and mtime of its ``libjvm.so``), the name, size and mtime of every
+    Spark jar, and the conf dir; None when there is no ``libjvm.so``."""
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    if not java or not os.path.exists(java):
+        return None
+    java = os.path.realpath(java)
+    libjvm = sorted(Path(java).parent.parent.glob("lib/*/libjvm.so"))
+    if not libjvm:
+        return None
+    h = hashlib.sha256()
+    st = libjvm[0].stat()
+    h.update(f"{java}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    for jar in sorted((spark_home / "jars").glob("*.jar")):
+        st = jar.stat()
+        h.update(f"{jar.name}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    h.update(str(conf_dir).encode())
+    return h.hexdigest()[:16]
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # alive, another user's
+        pass
+    return True
+
+
+def _publish_dump(proc: subprocess.Popen, part: Path, archive: Path) -> None:
+    """Exit hook of a dumping launch: end the JVM, which writes the
+    archive to ``part`` as it exits, and publish it as ``archive`` only
+    if the JVM exited 0 — by atomic rename, so a reader never maps a
+    partial file. Archives of other keys are deleted."""
+    proc.stdin.close()  # the gateway exits on EOF
+    try:
+        rc = proc.wait(timeout=_DUMP_WAIT_S)
+    except subprocess.TimeoutExpired:
+        log.warning("class archive: JVM still running after %.0f s; %s not published", _DUMP_WAIT_S, part)
+        return
+    if rc != 0 or not part.exists():
+        part.unlink(missing_ok=True)
+        log.warning("class archive: JVM exited %d without a dump; nothing published", rc)
+        return
+    os.replace(part, archive)
+    for old in archive.parent.glob("*.jsa"):
+        if old != archive:
+            old.unlink(missing_ok=True)
+    log.info("class archive published: %s", archive)
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -92,17 +289,19 @@ def ship_package(spark: SparkSession) -> None:
     zip_path = os.path.join(
         tempfile.gettempdir(), f"k8e_fetch_spark_pyfiles_{os.getpid()}.zip"
     )
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in root:
-                    continue
-                for f in files:
-                    # ship sources AND package data (resources/fixtures)
-                    # so the zip is self-sufficient off-repo
-                    if not f.endswith((".pyc", ".pyo")):
-                        full = os.path.join(root, f)
-                        zf.write(full, os.path.relpath(full, parent))
+    # rebuilt per process (a same-pid zip left by a killed process
+    # would ship stale code) and removed at exit
+    atexit.register(Path(zip_path).unlink, missing_ok=True)
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            if "__pycache__" in root:
+                continue
+            for f in files:
+                # ship sources AND package data (resources/fixtures)
+                # so the zip is self-sufficient off-repo
+                if not f.endswith((".pyc", ".pyo")):
+                    full = os.path.join(root, f)
+                    zf.write(full, os.path.relpath(full, parent))
     sc.addPyFile(zip_path)
     sc._k8e_pkg_shipped = True
 
@@ -116,8 +315,8 @@ def tune_session(spark: SparkSession) -> SparkSession:
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
-        except Exception:  # pragma: no cover - conf may be static in some harnesses
-            pass
+        except Exception as e:  # pragma: no cover - conf may be static in some harnesses
+            log.warning("tune_session could not set %s: %s", k, e)
     ship_package(spark)
     return spark
 

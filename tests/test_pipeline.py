@@ -166,6 +166,37 @@ def test_stage_memoization_skip_load(spark, tmp_path):
     assert {k: v.count() for k, v in crashed.items()} == counts_first
 
 
+def test_swap_crash_keeps_component_rows(spark, tmp_path, monkeypatch):
+    """A compress that dies between the flat-table swap's two renames
+    leaves c_name aside, never deleted: the next compress renames it
+    back and merges into all 5 rows (deleting the live table before the
+    rename lost the earlier runs' rows: 3 left)."""
+    import os
+
+    from k8e_fetch_spark.plans import snapshots as snap
+
+    wh = str(tmp_path / "wh")
+    pipe = Pipeline(spark, DEFAULT_SPEC, wh)
+    pipe.run(str(FIXTURES / "manifest.json"), str(FIXTURES))
+    landed = {"ncvoter_statewide": spark.read.parquet(f"{wh}/ncvoter_statewide")}
+    c_name = os.path.join(wh, "c_name")
+    real_replace = os.replace
+
+    def crash_on_c_name(src, dst, **kw):
+        if os.fspath(dst) == c_name:
+            raise OSError("injected crash")
+        return real_replace(src, dst, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash_on_c_name)
+        with pytest.raises(OSError, match="injected crash"):
+            pipe.compress(landed)
+    assert not os.path.exists(c_name)
+    assert not snap.is_flat_table(c_name + ".__old__")
+    assert pipe.compress(landed)["c_name"].count() == 5
+    assert sorted(os.listdir(wh)) == sorted(snap.flat_tables(wh))
+
+
 @pytest.mark.parametrize("listing", ['{"Versions": []}', "{}"], ids=["empty", "no_versions"])
 def test_empty_listing_loads_nothing(spark, tmp_path, listing):
     """An empty bucket's listing is a run with nothing to do: no tables,
