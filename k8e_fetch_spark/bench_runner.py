@@ -15,6 +15,7 @@ bench.py`` contract.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 
@@ -24,6 +25,8 @@ from k8e_fetch_spark.session import (
     get_spark,
     shuffle_partitions_for_dir,
 )
+
+log = logging.getLogger(__name__)
 
 HEADLINE = [
     "compress_distinct_status",
@@ -218,8 +221,8 @@ def main() -> None:
         qs["compress_distinct_status"](spark, sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
-    except Exception:
-        pass
+    except Exception as e:
+        log.warning("bench warm-up query failed: %s", e)
 
     # Three passes per query; report the warm (best) time as the
     # headline value — the first pass pays one-off plan analysis +
@@ -365,8 +368,8 @@ def main() -> None:
         with open(out_path, "w") as fh:
             json.dump(full, fh, indent=1, sort_keys=True)
             fh.write("\n")
-    except Exception:
-        pass  # the sidecar must never kill the driver-facing record
+    except (OSError, TypeError, ValueError) as e:  # unwritable, or not JSON
+        log.warning("full bench record not written: %s", e)  # stdout stays the record
     for line in emit_lines(record):
         print(line)
     spark.stop()

@@ -23,10 +23,13 @@ new one.
 
 from __future__ import annotations
 
+import logging
 import threading
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
+
+log = logging.getLogger(__name__)
 
 _LOCK = threading.Lock()
 _LIVE: dict[str, DataFrame] = {}
@@ -60,7 +63,7 @@ def persist_scoped(
         if prev is not None:
             try:
                 prev.unpersist(blocking=False)
-            except Exception:
-                pass  # a stopped/replaced context invalidates the handle
+            except Exception as e:  # a stopped/replaced context invalidates the handle
+                log.info("could not unpersist the previous %s frame: %s", key, e)
         _LIVE[key] = df.persist(level)
     return df

@@ -8,10 +8,16 @@ Spark-native equivalent of the reference's fetch-then-import path
 
 from __future__ import annotations
 
+import json
 import os
+from collections.abc import Callable
+from pathlib import Path
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from k8e_fetch_spark.session import facts
 
 TABLES = (
     "region",
@@ -41,8 +47,6 @@ def source_fingerprint(sf_dir: str, name: str) -> list:
     file's (relpath, size, mtime) so any part rewrite invalidates a
     fixture-reuse marker keyed on this value. Single files fingerprint
     as (mtime, size)."""
-    from pathlib import Path
-
     p = Path(table_path(sf_dir, name))
     if p.is_dir():
         return [
@@ -54,13 +58,33 @@ def source_fingerprint(sf_dir: str, name: str) -> list:
     return [st.st_mtime, st.st_size]
 
 
-# (applicationId, sf_dir, table) -> DataFrame. A DataFrame is an
+def derived_fixture(
+    marker: Path, fp: dict, built: Callable[[], bool], build: Callable[[], None]
+) -> None:
+    """Rebuild a fixture derived from source tables with ``build()``
+    unless ``marker`` holds their fingerprint ``fp`` and ``built()``. The
+    marker goes before a rebuild and is published after it by rename."""
+    try:
+        current = json.loads(marker.read_text()) == fp
+    except (OSError, ValueError):  # no marker yet, or a torn one
+        current = False
+    if current and built():
+        return
+    marker.unlink(missing_ok=True)
+    build()
+    tmp = marker.with_name(f".{marker.name}.{os.getpid()}.tmp")
+    tmp.write_text(json.dumps(fp))
+    tmp.replace(marker)
+
+
+# (SparkContext, sf_dir, table) -> DataFrame. A DataFrame is an
 # immutable logical plan, so handing the same one to every caller is
 # safe — and spark.read.parquet costs ~130 ms of driver time per call
 # (footer schema inference + Py4J), which multiplies across a suite
-# where most queries load 1-3 tables. Keyed by applicationId so a
-# stopped session's plans are never reused by its successor.
-_LOAD_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# where most queries load 1-3 tables. Keyed by the SparkContext object
+# (no Py4J call) so a stopped session's plans are never reused by its
+# successor, which always gets a new SparkContext.
+_LOAD_CACHE: dict[tuple[SparkContext, str, str], DataFrame] = {}
 
 
 def _as_event_time(dtype) -> F.Column:
@@ -93,12 +117,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       work).
     * ``TimestampType`` — already what every consumer wants; no-op.
     """
-    try:
-        app_id = spark.sparkContext.applicationId
-    except Exception:  # Spark Connect: no sparkContext; skip the cache
-        app_id = None
-    key = (app_id, sf_dir, name)
-    if app_id is not None and key in _LOAD_CACHE:
+    key = (spark.sparkContext, sf_dir, name)
+    if key in _LOAD_CACHE:
         return _LOAD_CACHE[key]
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -106,8 +126,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn("ts", _as_event_time(df.schema["ts"].dataType))
     else:
         df = spark.read.parquet(table_path(sf_dir, name))
-    if app_id is not None:
-        _LOAD_CACHE[key] = df
+    _LOAD_CACHE[key] = df
     return df
 
 
@@ -131,19 +150,11 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     (the 100 TB case: scans arrive thousands of partitions wide and must
     NOT be shrunk here).
     """
-    try:
-        target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    except Exception:
-        # sparkContext unavailable (e.g. Spark Connect)
-        target = min_partitions or 32
-    try:
-        # File-count width estimate: metadata-only (driver-side file
-        # index), no job, no plan-to-RDD conversion, Connect-safe. A
-        # scan over >= target files is already wide enough; the 100 TB
-        # case (thousands of files) short-circuits here and is never
-        # shrunk or re-exchanged.
-        if len(df.inputFiles()) >= target:
-            return df
-    except Exception:
-        pass
+    target = min_partitions or facts(df.sparkSession).cores
+    # File-count width estimate: metadata-only (driver-side file index),
+    # no job, no plan-to-RDD conversion. A scan over >= target files is
+    # already wide enough; the 100 TB case (thousands of files)
+    # short-circuits here and is never shrunk or re-exchanged.
+    if len(df.inputFiles()) >= target:
+        return df
     return df.repartition(target)

@@ -31,6 +31,7 @@ from k8e_fetch_spark.functions.vectors import (
     per_context_udf,
 )
 from k8e_fetch_spark.io import fan_out
+from k8e_fetch_spark.session import facts
 
 # Affine minhash coefficients: pairwise-independent-ish family
 # h_i(x) = (a_i * x + b_i) mod p, deterministic seeds. Coefficients are
@@ -277,6 +278,28 @@ def lsh_bands(
     return F.expr("array(" + ", ".join(structs) + ")")
 
 
+def _shingle_table(df: DataFrame, id_col: str, doc: str, sh: Column) -> DataFrame:
+    """``(doc, sh)`` from ``df``, hash-partitioned by ``doc`` as the
+    downstream joins want it, ready to persist.
+
+    The corpus is repartitioned BY ID once, BEFORE the shingle
+    projection: hashing after a narrow one-file read runs near-serial
+    (A/B: 0.7 s at 32-wide vs ~8 s), and the signature aggregation and
+    exact-verify joins reuse the table's hashpartitioning(doc) instead
+    of three shingle-sized exchanges (A/B at sf0.1: 0.76 s vs 0.88 s).
+    The hashing width is the core count floored at the shuffle width.
+    A smaller shuffle width (byte-sized bench sessions: 4 vs 32) is the
+    one the joins plan at, so the table lands there; on a real cluster
+    it is never smaller and the table is never shuffled twice.
+    """
+    f = facts(df.sparkSession)
+    width = max(f.cores, f.shuffle_partitions)
+    out = df.repartition(width, F.col(id_col)).select(F.col(id_col).alias(doc), sh.alias("sh"))
+    if f.shuffle_partitions < width:
+        out = out.repartition(f.shuffle_partitions, F.col(doc))
+    return out
+
+
 def minhash_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -297,8 +320,8 @@ def minhash_candidate_pairs(
     ~4x the work; ids + 64-bit hashes only, so it is orders of magnitude
     smaller than the corpus, and MEMORY_AND_DISK spills rather than
     OOMs). It is persisted ALREADY partitioned by doc id, which the
-    signature aggregation and both verify joins then reuse (see the
-    repartition note in the body). The band table is deliberately NOT
+    signature aggregation and both verify joins then reuse (see
+    :func:`_shingle_table`). The band table is deliberately NOT
     persisted: both pair branches consume the same bucket window, whose
     input exchange is reused, and a persist only blocks that (A/B at
     sf0.1: persisted window 1.69 s vs unpersisted 1.5 s warm).
@@ -321,54 +344,12 @@ def minhash_candidate_pairs(
     ``max_bucket`` ids regardless of the worst bucket's true size
     (tests/test_scale.py probes this with a planted mega bucket).
     """
-    # Corpus repartitioned BY ID once, up front (width = full machine
-    # parallelism, floored at the session shuffle width): the persisted
-    # shingle table then carries hashpartitioning(doc), which the
-    # signature aggregation AND both exact-verify joins reuse — three
-    # downstream exchanges of shingle-table-sized data collapse into
-    # this one text-sized exchange (A/B at sf0.1: 0.76 s vs 0.88 s
-    # round-robin; at 100 TB the text shuffle costs what ONE of the
-    # three saved shuffles would have).
-    #
-    # The repartition must come BEFORE the shingle projection: the
-    # corpus is typically one or few parquet files at bench SF, so
-    # hashing after a narrow read would run near-serial (A/B: shingle
-    # stage 0.7 s at 32-wide vs ~8 s single-partition). Width note: when
-    # the session's shuffle width is SMALLER than defaultParallelism
-    # (byte-sized bench sessions: 4 vs 32), the verify joins plan at the
-    # session width and re-exchange the persisted table — a local-mode
-    # artifact; on a real cluster shuffle.partitions >= parallelism, the
-    # widths agree, and the partitioning reuse holds end-to-end. Taking
-    # the max keeps the CPU-bound shingle hashing machine-wide in both
-    # regimes, which dominates the small re-exchange at bench SF.
-    spark = df.sparkSession
-    try:
-        width = max(
-            spark.sparkContext.defaultParallelism,
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-        )
-    except Exception:  # Spark Connect: no sparkContext
-        width = 32
-    sh = df.repartition(width, F.col(id_col)).select(
-        F.col(id_col).alias("doc"),
-        hashed_shingles(text_col, hash_mode=hash_mode).alias("sh"),
-    )
-    try:
-        sp_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        sp_width = width
-    if sp_width < width:
-        # local-mode artifact fix (the width note above): when the
-        # session's shuffle width is SMALLER than the scan width, the
-        # downstream joins plan at sp and would RE-EXCHANGE the
-        # persisted table; landing it at sp here keeps hashing
-        # machine-wide and the cache join-aligned. On a real cluster
-        # sp >= parallelism and this branch never runs — the corpus-
-        # sized shingle table is never shuffled twice at scale.
-        sh = sh.repartition(sp_width, F.col("doc"))
     from k8e_fetch_spark.functions.caching import persist_scoped
 
-    sh = persist_scoped(f"minhash.shingles.{hash_mode}", sh)
+    sh = persist_scoped(
+        f"minhash.shingles.{hash_mode}",
+        _shingle_table(df, id_col, "doc", hashed_shingles(text_col, hash_mode=hash_mode)),
+    )
     # MinHash signature as a whole-stage-codegen aggregation over the
     # id-partitioned table (no exchange, no Python worker round-trip —
     # see minhash_signature_agg for the arithmetic-parity contract).
@@ -899,41 +880,13 @@ def minhash_incremental_pairs(
     """
     from k8e_fetch_spark.functions.caching import persist_scoped
 
-    spark = existing.sparkSession
-    try:
-        width = max(
-            spark.sparkContext.defaultParallelism,
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-        )
-    except Exception:  # Spark Connect: no sparkContext
-        width = 32
-    try:
-        sp_width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        sp_width = width
-
-    def _land(frame):
-        # same local-mode artifact fix as minhash_candidate_pairs:
-        # align the persisted table with the downstream join width so
-        # small sessions don't re-exchange it per branch; a no-op on
-        # real clusters (sp >= parallelism).
-        return frame.repartition(sp_width, frame.columns[0]) if sp_width < width else frame
-
     sh_old = persist_scoped(
         "minhash_inc.shingles_old",
-        _land(
-            existing.repartition(width, F.col(id_col)).select(
-                F.col(id_col).alias("old_doc"), hashed_shingles(text_col).alias("sh")
-            )
-        ),
+        _shingle_table(existing, id_col, "old_doc", hashed_shingles(text_col)),
     )
     sh_new = persist_scoped(
         "minhash_inc.shingles_new",
-        _land(
-            new.repartition(width, F.col(id_col)).select(
-                F.col(id_col).alias("new_doc"), hashed_shingles(text_col).alias("sh")
-            )
-        ),
+        _shingle_table(new, id_col, "new_doc", hashed_shingles(text_col)),
     )
     bands_old = (
         minhash_signature_agg(sh_old.withColumnRenamed("old_doc", "doc"), num_hashes=num_hashes)

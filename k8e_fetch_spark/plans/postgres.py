@@ -29,12 +29,15 @@ container needed) in tests/test_postgres.py.
 
 from __future__ import annotations
 
+import logging
 import subprocess
 import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+log = logging.getLogger(__name__)
 
 _PG_TYPES: dict[type, str] = {
     T.StringType: "text",
@@ -366,8 +369,8 @@ def copy_from_executors(
     # fail the (already committed) load.
     try:
         _drop_staged(table, psql_args, load_id)
-    except Exception:
-        pass
+    except (RuntimeError, OSError) as e:  # psql failed, or could not start
+        log.warning("post-promote sweep of %s staging tables failed: %s", table, e)
 
 
 _NAMEDATALEN = 63  # Postgres identifier limit (bytes); longer names truncate SILENTLY

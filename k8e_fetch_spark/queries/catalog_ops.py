@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from k8e_fetch_spark.io import load, source_fingerprint
+from k8e_fetch_spark.io import derived_fixture, load, source_fingerprint
 from k8e_fetch_spark.queries.registry import register
 
 # --- deterministic synthetic manifest, identical in Spark and DuckDB ---
@@ -319,7 +319,6 @@ def catalog_flatten_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     CSV splits — exactly how a 100 TB nested crawl layout is read
     (file-listing parallelism replaces the reference's symlink pass);
     the provenance regex is a scan-local projection."""
-    import json
     import os
     import tempfile
     from pathlib import Path
@@ -335,17 +334,11 @@ def catalog_flatten_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet table can have parts rewritten in place without changing
     # the top-level stat — the same hazard join_bucketed_colocated fixed.
     fp = {"sf": str(sf_dir), "doc": source_fingerprint(sf_dir, "documents"), "v": 3}
-    marker = wh / "source_fingerprint.json"
     tree = wh / "tree"
-    reuse = False
-    try:
-        reuse = json.loads(marker.read_text()) == fp and tree.exists()
-    except Exception:
-        reuse = False
-    if not reuse:
+
+    def build() -> None:
         import shutil
 
-        marker.unlink(missing_ok=True)
         shutil.rmtree(tree, ignore_errors=True)
         # shard must VARY within a source: the fixture assigns
         # source = src{doc_id % 20}, so doc_id % 2 is constant per
@@ -361,9 +354,8 @@ def catalog_flatten_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("header", "false")
             .csv(str(tree))
         )
-        tmp = marker.with_name(f".{marker.name}.{os.getpid()}.tmp")
-        tmp.write_text(json.dumps(fp))
-        tmp.replace(marker)
+
+    derived_fixture(wh / "source_fingerprint.json", fp, tree.exists, build)
     flat = (
         spark.read.schema("doc_id long")
         .option("recursiveFileLookup", "true")

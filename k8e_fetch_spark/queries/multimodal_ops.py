@@ -710,12 +710,11 @@ def mm_jvm_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the bucket manifest and decode throughput scales with executor
     count; nothing here is driver-resident.
     """
-    import json
     import os
     import tempfile
     from pathlib import Path
 
-    from k8e_fetch_spark.io import source_fingerprint
+    from k8e_fetch_spark.io import derived_fixture, source_fingerprint
     from k8e_fetch_spark.sources.images import binary_byte_sum, read_images
 
     wh = Path(
@@ -733,17 +732,11 @@ def mm_jvm_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     sub = hashlib.md5(str(sf_dir).encode()).hexdigest()[:8]
-    marker = wh / f"source_fingerprint_{sub}.json"
     tree = wh / f"tree_{sub}"
-    reuse = False
-    try:
-        reuse = json.loads(marker.read_text()) == fp and tree.exists()
-    except Exception:
-        reuse = False
-    if not reuse:
+
+    def build() -> None:
         import shutil
 
-        marker.unlink(missing_ok=True)
         shutil.rmtree(tree, ignore_errors=True)
         tree.mkdir(parents=True)
         tree_str = str(tree)
@@ -764,7 +757,8 @@ def mm_jvm_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.replace(tmp, os.path.join(tree_str, f"doc_{i}.png"))
 
         load(spark, sf_dir, "documents").select("doc_id").foreachPartition(write_part)
-        marker.write_text(json.dumps(fp))
+
+    derived_fixture(wh / f"source_fingerprint_{sub}.json", fp, tree.exists, build)
 
     img = read_images(spark, str(tree), glob="*.png")
     return img.select(

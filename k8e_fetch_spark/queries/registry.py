@@ -16,10 +16,13 @@ Conventions (these make the hash-compare meaningful):
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+log = logging.getLogger(__name__)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -127,8 +130,8 @@ def register(
                 if esc_was_true:
                     try:
                         spark.conf.set(esc_key, "true")
-                    except Exception:
-                        pass  # session may be stopped; nothing to restore onto
+                    except Exception as e:  # session may be stopped; nothing to restore onto
+                        log.info("could not restore %s: %s", esc_key, e)
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__

@@ -892,7 +892,6 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     stale reuse is caught by the answer hash check against the
     raw-parquet oracle. Revenue uses the integer-cent convention
     (exact bigint sum, float order can't drift)."""
-    import json
     import os
     import tempfile
     from pathlib import Path
@@ -914,31 +913,21 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     wh.mkdir(parents=True, exist_ok=True)
     spark.sql(f"CREATE DATABASE IF NOT EXISTS k8e_bucket_demo LOCATION '{wh}'")
 
-    from k8e_fetch_spark.io import source_fingerprint as _stat_fp
+    from k8e_fetch_spark.io import derived_fixture, source_fingerprint
 
     fp = {
         "sf": str(sf_dir),
-        "li": _stat_fp(sf_dir, "lineitem"),
-        "od": _stat_fp(sf_dir, "orders"),
+        "li": source_fingerprint(sf_dir, "lineitem"),
+        "od": source_fingerprint(sf_dir, "orders"),
         "v": 2,
     }
-    marker = wh / "source_fingerprint.json"
-    reuse = False
-    try:
-        reuse = (
-            json.loads(marker.read_text()) == fp
-            and spark.catalog.tableExists("k8e_bucket_demo.li_rev")
-            and spark.catalog.tableExists("k8e_bucket_demo.od_pri")
-        )
-    except Exception:
-        reuse = False
-    if not reuse:
+
+    def build() -> None:
         # self-heal: DROP removes a live table's files; rmtree clears a
         # stale location left by a previous session (saveAsTable refuses
         # a managed-table path that exists without catalog metadata)
         import shutil
 
-        marker.unlink(missing_ok=True)
         for t in ("li_rev", "od_pri"):
             spark.sql(f"DROP TABLE IF EXISTS k8e_bucket_demo.{t}")
             shutil.rmtree(wh / t, ignore_errors=True)
@@ -948,10 +937,14 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         od = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
         write_bucketed(li, "k8e_bucket_demo.li_rev", ["l_orderkey"], 8, ["l_orderkey"])
         write_bucketed(od, "k8e_bucket_demo.od_pri", ["o_orderkey"], 8, ["o_orderkey"])
-        # atomic publish: a reader never sees a half-written marker
-        tmp = marker.with_name(f".{marker.name}.{os.getpid()}.tmp")
-        tmp.write_text(json.dumps(fp))
-        tmp.replace(marker)
+
+    derived_fixture(
+        wh / "source_fingerprint.json",
+        fp,
+        lambda: spark.catalog.tableExists("k8e_bucket_demo.li_rev")
+        and spark.catalog.tableExists("k8e_bucket_demo.od_pri"),
+        build,
+    )
     lib = spark.table("k8e_bucket_demo.li_rev")
     odb = spark.table("k8e_bucket_demo.od_pri")
     cents = F.floor(

@@ -105,15 +105,18 @@ def get_spark(
         with _spark_conf_dir(launch.conf_dir):
             spark = build({**conf, _JAVA_OPTS: opts})
     except Exception as e:
+        launch.log.unlink(missing_ok=True)
         if SparkContext._gateway is not None:  # the JVM is up: not the archive's fault
             raise
-        if launch.part is None:
-            launch.archive.unlink(missing_ok=True)
+        launch.drop_archive()
         log.warning("class archive rejected (%s): %s; relaunched without it", decision, e)
         return build(conf)
     if launch.part is not None:
         atexit.register(_publish_dump, SparkContext._gateway.proc, launch.part, launch.archive)
     log.info("class archive %s", decision)
+    if launch.refused():
+        launch.drop_archive()
+        log.warning("class archive %s refused by the JVM; deleted", launch.archive)
     return spark
 
 
@@ -133,22 +136,49 @@ def _spark_conf_dir(path: Path):
 
 class _Launch(NamedTuple):
     """How one fresh JVM launch uses the class archive cache: map
-    ``archive``, or dump to ``part`` (not None) at exit; either way with
-    the empty ``conf_dir`` as ``SPARK_CONF_DIR``."""
+    ``archive``, whose (inode, mtime) was ``mapped``, or dump to ``part``
+    (not None) at exit; either way with the empty ``conf_dir`` as
+    ``SPARK_CONF_DIR``."""
 
     archive: Path
     part: Path | None
     conf_dir: Path
+    mapped: tuple[int, int] | None = None
+
+    def drop_archive(self) -> None:
+        """Delete the archive this launch mapped, unless another process
+        has since published a new one at its path."""
+        with contextlib.suppress(OSError):
+            st = self.archive.stat()
+            if (st.st_ino, st.st_mtime_ns) == self.mapped:
+                self.archive.unlink()
+
+    @property
+    def log(self) -> Path:
+        """Where a mapping launch logs cds warnings."""
+        return self.archive.with_name(f"{self.archive.stem}.{os.getpid()}.jsa.log")
+
+    def refused(self) -> bool:
+        """Whether ``log`` says the JVM refused the archive (the one place
+        that shows: ``java.vm.info`` reads "sharing" as the base archive
+        maps); removes ``log``."""
+        try:
+            return "Unable to use shared archive" in self.log.read_text(errors="replace")
+        except OSError:
+            return False
+        finally:
+            self.log.unlink(missing_ok=True)
 
     @property
     def java_opts(self) -> str:
         # The CRC check turns a damaged archive into a clean refusal (it
         # costs no measurable launch CPU). cds messages go to stderr,
         # never into a caller's stdout: warnings such as that refusal
-        # when mapping, errors only when dumping, which warns once per
-        # class it cannot archive (hundreds of lines).
+        # when mapping (and to ``log``), errors only when dumping, which
+        # warns once per class it cannot archive (hundreds of lines).
         if self.part is None:
-            use, level = f"-XX:SharedArchiveFile={self.archive}", "warning"
+            use = f"-XX:SharedArchiveFile={self.archive} -Xlog:cds*=warning:file={self.log}"
+            level = "warning"
         else:
             use, level = f"-XX:ArchiveClassesAtExit={self.part}", "error"
         return f"{use} -XX:+VerifySharedSpaces -Xlog:cds*=off:stdout -Xlog:cds*={level}:stderr"
@@ -190,22 +220,24 @@ def _plan_launch(conf: dict[str, str]) -> tuple[_Launch | None, str]:
         return None, f"cannot create {conf_dir}: {e}"
     if not os.access(cache, os.W_OK):
         return None, f"{cache} is not writable"
-    if any(c.isspace() or c in "'\"" for c in str(cache)):
+    if any(c.isspace() or c in "'\":" for c in str(cache)):
         return None, f"{cache} would need quoting in {_JAVA_OPTS}"
     if any(conf_dir.iterdir()):
         return None, f"{conf_dir} is not empty"
     key = _cache_key(spark_home, conf_dir)
     if key is None:
         return None, "no libjvm.so found for the JVM spark-submit runs"
-    for part in cache.glob("*.jsa.part"):  # <key>.<writer pid>.jsa.part
+    for part in cache.glob("*.jsa.*"):  # <key>.<launcher pid>.jsa.{part,log}
         pid = part.name.split(".")[1]
         if not (pid.isdigit() and _alive(int(pid))):
             part.unlink(missing_ok=True)
     archive = cache / f"{key}.jsa"
-    if archive.exists():
-        return _Launch(archive, None, conf_dir), f"used {archive}"
-    part = cache / f"{key}.{os.getpid()}.jsa.part"
-    return _Launch(archive, part, conf_dir), f"dumping to {part}"
+    try:
+        st = archive.stat()
+    except OSError:
+        part = cache / f"{key}.{os.getpid()}.jsa.part"
+        return _Launch(archive, part, conf_dir), f"dumping to {part}"
+    return _Launch(archive, None, conf_dir, (st.st_ino, st.st_mtime_ns)), f"used {archive}"
 
 
 def _cache_key(spark_home: Path, conf_dir: Path) -> str | None:
@@ -262,6 +294,29 @@ def _publish_dump(proc: subprocess.Popen, part: Path, archive: Path) -> None:
     log.info("class archive published: %s", archive)
 
 
+class SessionFacts(NamedTuple):
+    """What the engine sizes its plans by, as :func:`facts` reads it."""
+
+    cores: int
+    shuffle_partitions: int
+    max_split_bytes: int
+    open_cost_bytes: int
+
+
+def facts(spark: SparkSession) -> SessionFacts:
+    """The package's one reader of the session facts, read afresh on
+    every call: the confs can change at runtime. Classic sessions only:
+    Spark Connect has no SparkContext or ``_jsparkSession`` to read them
+    from, nor the ``addPyFile`` that :func:`ship_package` ships with."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return SessionFacts(
+        cores=spark.sparkContext.defaultParallelism,
+        shuffle_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
+        max_split_bytes=conf.filesMaxPartitionBytes(),
+        open_cost_bytes=conf.filesOpenCostInBytes(),
+    )
+
+
 def ship_package(spark: SparkSession) -> None:
     """Ship k8e_fetch_spark to executor Python workers via ``addPyFile``.
 
@@ -271,14 +326,9 @@ def ship_package(spark: SparkSession) -> None:
     would fail with ModuleNotFoundError. Zipping the package and
     ``addPyFile``-ing it is the cluster-correct fix — the same call that
     ships code to 1000 executors ships it to local[32] workers.
-    Idempotent per SparkContext. No-op when the classic API is
-    unavailable (Spark Connect ships dependencies via addArtifact
-    instead; our UDF surface would need that path configured).
+    Idempotent per SparkContext.
     """
-    try:
-        sc = spark.sparkContext
-    except Exception:
-        return
+    sc = spark.sparkContext
     if getattr(sc, "_k8e_pkg_shipped", False):
         return
     import tempfile
@@ -330,8 +380,6 @@ def adaptive_enabled_for_dir(data_dir: str, threshold_bytes: int = 1 << 30) -> b
     window_order_rank 0.62->0.40, profile 0.82->0.54 — ~0.2 s/query).
     On a 100 TB cluster the input is always over threshold and AQE is
     always on; this only turns it off where it cannot help."""
-    from pathlib import Path
-
     try:
         total = sum(f.stat().st_size for f in Path(data_dir).glob("**/*.parquet"))
     except OSError:
@@ -348,8 +396,6 @@ def shuffle_partitions_for_dir(data_dir: str, cpus: int | None = None) -> int:
     (measured ~30% of warm wall time on small-SF aggregates); at 100 TB
     the byte rule takes over and AQE's advisory coalescing refines it
     at runtime. Static inputs only — no Spark job, no session needed."""
-    from pathlib import Path
-
     cpus = cpus or DEFAULT_CPUS
     try:
         total = sum(f.stat().st_size for f in Path(data_dir).glob("**/*.parquet"))

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from k8e_fetch_spark.operators.repair import normalize_header_name, quote_repair
+from k8e_fetch_spark.session import facts
 
 LINES_SCHEMA = T.StructType(
     [
@@ -270,14 +271,10 @@ def _decode_width(spark: SparkSession, member_bytes: int) -> int:
     than ``openCostInBytes`` and no larger than the bytes per core
     (``FilePartition.maxSplitBytes``) — capped at the default
     parallelism."""
-    try:
-        cores = spark.sparkContext.defaultParallelism
-        conf = spark._jsparkSession.sessionState().conf()
-        max_split, open_cost = conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes()
-    except Exception:  # Spark Connect: no SparkContext handle; Spark's defaults
-        cores, max_split, open_cost = 32, 128 << 20, 4 << 20
-    split = min(max_split, max(open_cost, (member_bytes + open_cost) // cores))
-    return min(cores, -(-member_bytes // split))
+    f = facts(spark)
+    per_core = (member_bytes + f.open_cost_bytes) // f.cores
+    split = min(f.max_split_bytes, max(f.open_cost_bytes, per_core))
+    return min(f.cores, -(-member_bytes // split))
 
 
 def read_source(spark: SparkSession, paths: list[str], spec: ReaderSpec) -> DataFrame:

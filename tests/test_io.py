@@ -70,3 +70,38 @@ def test_streaming_source_ts_is_watermarkable(spark, tmp_path):
     stream = stream_events(spark, str(d))
     assert isinstance(stream.schema["ts"].dataType, T.TimestampType)
     stream.withWatermark("ts", "10 minutes")  # raises on NTZ
+
+
+def test_derived_fixture_rebuilds_only_when_stale(tmp_path):
+    from k8e_fetch_spark.io import derived_fixture
+
+    marker, builds = tmp_path / "fp.json", []
+    there = {"ok": True}
+
+    def run(fp):
+        derived_fixture(marker, fp, lambda: there["ok"], lambda: builds.append(fp))
+
+    run({"v": 1})  # no marker yet
+    run({"v": 1})  # current: reused
+    assert builds == [{"v": 1}]
+    run({"v": 2})  # sources changed
+    there["ok"] = False
+    run({"v": 2})  # marker current, fixture gone
+    marker.write_text("{torn")
+    there["ok"] = True
+    run({"v": 2})  # unreadable marker
+    assert builds == [{"v": 1}, {"v": 2}, {"v": 2}, {"v": 2}]
+    assert not list(tmp_path.glob(".*.tmp"))
+
+
+def test_derived_fixture_does_not_read_a_failing_check_as_stale(tmp_path):
+    from k8e_fetch_spark.io import derived_fixture
+
+    marker = tmp_path / "fp.json"
+    derived_fixture(marker, {"v": 1}, lambda: True, lambda: None)
+
+    def broken() -> bool:
+        raise RuntimeError("catalog down")
+
+    with pytest.raises(RuntimeError, match="catalog down"):
+        derived_fixture(marker, {"v": 1}, broken, lambda: pytest.fail("rebuilt"))

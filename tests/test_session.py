@@ -1,7 +1,8 @@
 """The launch cache of ``session.get_spark``: a driver JVM launch maps a
 cached class archive, or dumps one at exit, and a damaged archive, a
 user's Spark config or a caller's JVM options never cost a working
-session.
+session. Also ``session.facts``, the package's one reader of the
+session facts it sizes plans by.
 
 Every launch runs in its own Python process with ``XDG_CACHE_HOME`` in a
 temp dir, so no test touches the user's cache. The module's first two
@@ -123,12 +124,31 @@ def test_corrupt_archive_is_refused_without_stdout_noise(dumped, tmp_path):
     data = bytearray(dumped.pristine.read_bytes())
     mid = len(data) // 2
     data[mid : mid + 4096] = bytes(b ^ 0xFF for b in data[mid : mid + 4096])
-    _plant(dumped, bytes(data))
+    archive = _plant(dumped, bytes(data))
     run = _launch(dumped.xdg, tmp_path)
     assert run.count == 3
     assert "class archive used" in run.stderr
     assert "Unable to use shared archive" in run.stderr  # refused, on stderr
     assert len(run.stdout.splitlines()) == 1  # the RESULT line, nothing from the JVM
+    assert not archive.exists()  # deleted, so the next launch dumps a good one
+    assert not list(dumped.cache.glob("*.jsa.log"))  # the launch's cds log is gone
+
+
+def test_refused_archive_is_kept_once_a_new_one_is_published(tmp_path):
+    from k8e_fetch_spark.session import _Launch
+
+    archive = tmp_path / "key.jsa"
+    archive.write_bytes(b"mapped")
+    st = archive.stat()
+    launch = _Launch(archive, None, tmp_path, (st.st_ino, st.st_mtime_ns))
+    dump = tmp_path / "key.1.jsa.part"
+    dump.write_bytes(b"published")
+    os.replace(dump, archive)  # another launch published its dump meanwhile
+    launch.drop_archive()
+    assert archive.read_bytes() == b"published"
+    st = archive.stat()
+    launch._replace(mapped=(st.st_ino, st.st_mtime_ns)).drop_archive()
+    assert not archive.exists()
 
 
 def test_user_spark_config_is_never_hidden(tmp_path):
@@ -153,4 +173,47 @@ def test_caller_java_options_survive(dumped, tmp_path):
     assert run.probe == "42"
     assert f"-XX:SharedArchiveFile={archive}" in run.java_opts
     assert "class archive used" in run.stderr and "rejected" not in run.stderr
+    assert archive.exists() and "refused" not in run.stderr  # a good archive is kept
     assert run.conf_dir == os.environ.get("SPARK_CONF_DIR")  # restored after the launch
+
+
+def test_facts_match_direct_reads_and_follow_runtime_conf(spark):
+    from k8e_fetch_spark.session import facts
+
+    conf = spark._jsparkSession.sessionState().conf()
+    assert facts(spark) == (
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        conf.filesMaxPartitionBytes(),
+        conf.filesOpenCostInBytes(),
+    )
+    split, width = facts(spark).max_split_bytes, facts(spark).shuffle_partitions
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(split // 2))
+        spark.conf.set("spark.sql.shuffle.partitions", str(width + 3))
+        assert facts(spark).max_split_bytes == split // 2
+        assert facts(spark).shuffle_partitions == width + 3
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
+
+
+#: What only ``session.facts`` may read: Py4J attribute names, and the
+#: conf key as a whole string literal.
+_FACT_NAMES = {"defaultParallelism", "applicationId", "filesMaxPartitionBytes", "filesOpenCostInBytes"}
+_FACT_CONF = "spark.sql.shuffle.partitions"
+
+
+def test_session_facts_have_one_reader():
+    import ast
+
+    readers = []
+    for path in sorted((REPO_ROOT / "k8e_fetch_spark").rglob("*.py")):
+        if path.name == "session.py" and path.parent.name == "k8e_fetch_spark":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.Attribute) and node.attr in _FACT_NAMES) or (
+                isinstance(node, ast.Constant) and node.value == _FACT_CONF
+            ):
+                readers.append(f"{path.relative_to(REPO_ROOT)}:{node.lineno}")
+    assert readers == [], "read session.facts instead: " + ", ".join(readers)
